@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import inspect
+import sys
 import types
 
 PKG = "seoul_big_data_spark"
@@ -84,7 +85,11 @@ def _local_imports(fn: types.FunctionType):
         tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
     except (OSError, TypeError, SyntaxError):
         return _LOCAL_IMPORT_CACHE[ck]
-    pkg_ctx = getattr(fn, "__module__", "") or ""
+    # Relative imports resolve against the defining module's PACKAGE
+    # (``from .operators import x`` in seoul_big_data_spark.q_text means
+    # seoul_big_data_spark.operators.x).
+    own = getattr(fn, "__module__", "") or ""
+    pkg_ctx = getattr(sys.modules.get(own), "__package__", None) or own.rpartition(".")[0]
     found = []
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom):
@@ -135,8 +140,8 @@ def _follow(fn: types.FunctionType, pkg: str, seen: set, out: dict) -> None:
         else:
             candidates.append(ref)
     for mod in modules:
-        # ``windows.sessionize_scalable``: the module name AND the attribute
-        # name both appear in co_names; resolve the pairs.
+        # ``windows.sessionize_agg_scalable``: the module name AND the
+        # attribute name both appear in co_names; resolve the pairs.
         if str(getattr(mod, "__name__", "")).startswith(pkg):
             for attr in names:
                 sub = getattr(mod, attr, None)

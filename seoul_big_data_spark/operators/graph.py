@@ -25,25 +25,14 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration PageRank; returns (id, rank).
 
     ``edges`` is directed; pass both directions for an undirected graph.
     rank_{t+1}(v) = (1-d)/N + d * sum over in-neighbors u of rank_t(u)/deg(u).
 
-    ``checkpoint_every`` (r11, MEASURED NEGATIVE — keep 1): skipping
-    checkpoints looked like a win at sf0.1 (each ``localCheckpoint`` is an
-    eager job; k=1 5.42 s vs k=2 4.38 s, 3-rep noop A/B) but INVERTS at
-    scale: at x32 (160k vertices) k=2 measured 88.6 s vs the k=1 record's
-    17.0 s and OOMed a broadcast build in the harness session — a lazy
-    (un-checkpointed) rank state denies AQE the real frame sizes, so the
-    next iteration's joins are planned from nested-join estimates (wrong
-    build sides, broadcast attempts on non-broadcastable state). The
-    per-iteration checkpoint IS what keeps iteration plans correctly sized;
-    its job cost is the price of statistics. Ranks are bit-identical
-    across k at the consumers' ppm rounding (hash-verified k ∈ {1,2,5,10}),
-    so the knob stays for small-graph callers that want it."""
+    Checkpointing every 2nd iteration instead measured 88.6 s vs 17.0 s at
+    x32 (and a broadcast OOM): lazy rank state hides real sizes from AQE."""
     # localCheckpoint (eager), not cache(): caching materializes partitions
     # but the LOGICAL plan keeps nesting — by iteration 10 Catalyst would
     # re-analyze ten stacked joins plus the edge list's full upstream
@@ -65,7 +54,7 @@ def pagerank(
     # form the oracle unrolls.
     ew = e.join(outdeg, "src").localCheckpoint()
     ranks = v.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint()
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             ew.join(ranks, ew.src == ranks.id)
             .select(F.col("dst").alias("id"), (F.col("rank") / F.col("deg")).alias("c"))
@@ -79,8 +68,6 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # eager: materializes AND truncates lineage (see docstring for
-            # the checkpoint cadence trade-off)
-            ranks = ranks.localCheckpoint()
+        # eager: materializes AND truncates lineage every iteration
+        ranks = ranks.localCheckpoint()
     return ranks

@@ -241,139 +241,17 @@ def ntile_scalable(
     )
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    gap_units: int | None = None,
-    tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """Session assignment via lag-gap cumulative sum (batch sessionization,
-    SURVEY.md §2.8): a new session starts when the gap to the previous event
-    of the same user exceeds the threshold. One shuffle on user_col.
-    ``gap_units``/``tiebreak_cols`` as in :func:`sessionize_scalable`."""
-    gap_sec = gap_units if gap_units is not None else gap_minutes * 60
-    tie = list(tiebreak_cols or [])
-    w = Window.partitionBy(user_col).orderBy(ts_col, *tie)
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    return df.withColumn(
-        "session_id", F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+#: Fixed-width global time slices a HOT key's timeline is cut into; each
+#: slice is one window task. Every recorded measurement ran at 256 (64/128
+#: were within noise at x128/x512, SURVEY.md).
+_N_SLICES = 256
 
+#: Keys with more rows than this are hot and get time-sliced; every other
+#: key takes slice 0. ``|hot| ≤ N/_HOT_THRESHOLD`` by construction, so the
+#: hot-key broadcast is safe at any N. Tests set 0 to force the sliced route.
+_HOT_THRESHOLD = 200_000
 
-def gaps_auto(
-    df: DataFrame,
-    part_cols: list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-    out: str = "gap",
-    hot_threshold: int = 200_000,
-    n_slices: int = 256,
-) -> DataFrame:
-    """Skew-split inter-arrival gaps — :func:`gaps_scalable`'s routing
-    companion (same rationale as :func:`sessionize_auto`): keys with >
-    ``hot_threshold`` rows take the slice-and-stitch path, the cold mass
-    takes one plain lag window. ``|hot| ≤ N/hot_threshold`` by
-    construction, so the routing broadcast is provably safe. Gap multiset
-    identical to the window form on both paths. Same measured outcome as
-    :func:`sessionize_auto` (see its docstring): at every measurable tier
-    the pure :func:`gaps_scalable` dominates, so production call sites use
-    that; this is the documented asymptotic alternative."""
-    from pyspark import StorageLevel
-
-    tie = list(tiebreak_cols or [])
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = df.groupBy(*part_cols).agg(F.count("*").alias("_n"))
-    hot = counts.filter(F.col("_n") > hot_threshold).select(*part_cols)
-    w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-    ts = F.col(ts_col)
-    cold = (
-        df.join(F.broadcast(hot), part_cols, "left_anti")
-        .select(*part_cols, (ts - F.lag(ts).over(w)).alias(out))
-        .filter(F.col(out).isNotNull())
-    )
-    hot_g = gaps_scalable(
-        df.join(F.broadcast(hot), part_cols, "left_semi"),
-        part_cols,
-        ts_col,
-        tiebreak_cols=tie,
-        out=out,
-        n_slices=n_slices,
-    )
-    return cold.unionByName(hot_g)
-
-
-def sessionize_auto(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    gap_units: int | None = None,
-    tiebreak_cols: list[str] | None = None,
-    hot_threshold: int = 200_000,
-    n_slices: int = 256,
-) -> DataFrame:
-    """Skew-split sessionization — the production form. The plain window
-    (:func:`sessionize`) is optimal for the cold mass but serializes a hot
-    key's whole timeline into one task; the bucket-and-stitch form
-    (:func:`sessionize_scalable`) is hot-key-proof but pays ~2 extra
-    passes on EVERY key. This routes each user to the right plan — the
-    AQE skew-join split idea applied to a window, which AQE itself cannot
-    split:
-
-    1. per-user counts (combinable aggregate, skew-immune);
-    2. hot = users with > ``hot_threshold`` events. ``|hot| ≤
-       N/hot_threshold`` BY CONSTRUCTION (at 100 B events and the default
-       threshold that is ≤ 500k ids, a few MB) — so the broadcast below
-       is provably safe, not heuristically;
-    3. cold mass → plain window; hot slice → bucket-and-stitch; union.
-
-    Both paths produce bit-identical session ids (each pinned against the
-    window form; tests/test_windows_scalable.py adds the mixed-population
-    union case), so routing is invisible to consumers and oracles. The
-    input is persisted (counts + both branches read it; the house
-    persist-and-let-LRU-evict lifecycle) — project to the columns you
-    need BEFORE calling.
-
-    MEASURED OUTCOME (r9, x32 = 3.2M events / 32 cores): the routing
-    plumbing (persist + counts + anti/semi joins + two branches) costs
-    MORE than it saves at every tier this box can measure — uniform x32
-    2.27 s vs the pure scalable form's 1.95 s, and hot-shape ratios
-    1.02–1.28 vs the pure form's 0.74–0.97 — so production call sites use
-    :func:`sessionize_scalable` directly. This form is the asymptotic
-    design for corpora where the cold mass is large enough that one plain
-    window pass beats slicing everything (the per-branch fixed costs
-    amortize away as N grows); re-evaluate the routing threshold there
-    before adopting.
-    """
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = df.groupBy(user_col).agg(F.count("*").alias("_n"))
-    hot = counts.filter(F.col("_n") > hot_threshold).select(user_col)
-    cold_s = sessionize(
-        df.join(F.broadcast(hot), user_col, "left_anti"),
-        user_col,
-        ts_col,
-        gap_minutes,
-        gap_units=gap_units,
-        tiebreak_cols=tiebreak_cols,
-    )
-    hot_s = sessionize_scalable(
-        df.join(F.broadcast(hot), user_col, "left_semi"),
-        user_col,
-        ts_col,
-        gap_minutes,
-        n_slices=n_slices,
-        gap_units=gap_units,
-        tiebreak_cols=tiebreak_cols,
-    )
-    return cold_s.unionByName(hot_s)
-
-
-#: Expected sampled rows for a key sitting exactly at ``hot_threshold``
+#: Expected sampled rows for a key sitting exactly at ``_HOT_THRESHOLD``
 #: under the sampled probe (below: detection cutoff is half of this).
 _PROBE_SAMPLE_TARGET = 64
 
@@ -393,7 +271,9 @@ def _static_row_bound(df: DataFrame) -> int | None:
     sum of the input files' footer ``num_rows`` (parquet metadata — no data
     pages touched). File count is capped (``_ROW_BOUND_MAX_FILES``) so this
     never becomes a driver-side footer-listing storm at 100 TB, where total
-    rows dwarf any hot threshold and the sampled probe is the right tool."""
+    rows dwarf any hot threshold and the sampled probe is the right tool.
+    Without pyarrow there is no footer reader: ``None``, and the sampled
+    probe decides instead."""
     try:
         tree = df._jdf.queryExecution().analyzed().treeString()
     except Exception:  # pragma: no cover - defensive (py4j surface)
@@ -408,7 +288,10 @@ def _static_row_bound(df: DataFrame) -> int | None:
         return None
     from urllib.parse import unquote, urlparse
 
-    import pyarrow.parquet as pq
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:
+        return None
 
     total = 0
     for f in files:
@@ -423,11 +306,11 @@ def _static_row_bound(df: DataFrame) -> int | None:
 
 
 def _hot_key_stats(
-    df: DataFrame, key_cols: list[str], ts_expr, hot_threshold: int
+    df: DataFrame, key_cols: list[str], ts_expr
 ) -> tuple[tuple[float, float], DataFrame | None]:
     """Hot-key probe for the slice-and-stitch family: returns
     ``((lo, hi), hot)`` where ``hot`` is the frame of keys with more than
-    ``hot_threshold`` rows, or ``None`` when no key is hot (then
+    ``_HOT_THRESHOLD`` rows, or ``None`` when no key is hot (then
     ``(lo, hi)`` may be ``(0, 0)`` — the caller takes the plain window
     route and never reads the bounds).
 
@@ -440,7 +323,7 @@ def _hot_key_stats(
     repeatedly in a Bernoulli sample, so:
 
     1. **Sampled scan** (fraction ``f = _PROBE_SAMPLE_TARGET /
-       hot_threshold``, seeded): keys with ≥ ``_PROBE_SAMPLE_TARGET / 2``
+       _HOT_THRESHOLD``, seeded): keys with ≥ ``_PROBE_SAMPLE_TARGET / 2``
        sampled rows become candidates. No corpus shuffle — the groupBy
        runs over ~``f·N`` rows. A key at the threshold expects
        ``_PROBE_SAMPLE_TARGET`` sampled rows, so missing one needs a
@@ -449,7 +332,7 @@ def _hot_key_stats(
        ~threshold rows — benign by the threshold's own definition. A
        whale key (the shape this exists for) oversamples by orders of
        magnitude and cannot be missed. Candidates are bounded by
-       construction: ``|cand| ≤ f·N/(target/2) = 2N/hot_threshold``.
+       construction: ``|cand| ≤ f·N/(target/2) = 2N/_HOT_THRESHOLD``.
     2. **No candidates** (the uniform-corpus common case): done — the
        whole probe cost one 0.03%-materialized scan, no shuffle, no
        persist, no second pass.
@@ -461,19 +344,20 @@ def _hot_key_stats(
        the candidate set; ``(lo, hi)`` are exact whenever slicing
        happens.
 
-    ``hot_threshold ≤ _PROBE_SAMPLE_TARGET`` (tests pinning specific
-    routes, the ``hot_threshold=0`` force-slice convention) skips the
-    sample and runs the verification grouping with every key a candidate
-    of itself — the pre-r10 exact semantics at sizes where exactness is
-    free.
+    ``_HOT_THRESHOLD ≤ _PROBE_SAMPLE_TARGET`` (tests pinning specific
+    routes, the ``0`` force-slice convention) skips the sample and runs
+    the verification grouping with every key a candidate of itself — the
+    pre-r10 exact semantics at sizes where exactness is free.
 
-    Driver state: 3–4 scalars per pass (annotated-collect convention;
-    :func:`_range_probe` explains why a collect, not a broadcast
-    singleton attach). Routing is the ONLY thing the probe decides —
-    session ids are bit-identical on every route (a single slice's local
-    sessions ARE its global sessions; pinned in
-    tests/test_windows_scalable.py) — so sampling cannot affect results,
-    only which keys pay the slice-and-stitch machinery.
+    Driver state: 3–4 scalars per pass, COLLECTED rather than attached as
+    a broadcast singleton: Catalyst constant-folds a literal equi-key on a
+    1-row side back into a BroadcastNestedLoopJoin, which consumers whose
+    audited design promise is "no BNLJ anywhere" cannot have, and the
+    collected literals keep the slice expression foldable. Routing is the
+    ONLY thing the probe decides — session ids are bit-identical on every
+    route (a single slice's local sessions ARE its global sessions; pinned
+    in tests/test_windows_scalable.py) — so sampling cannot affect
+    results, only which keys pay the slice-and-stitch machinery.
 
     WHY hot routing (r10, VERDICT r9 What's wrong #2): slicing EVERY key's
     timeline into global time buckets fragments the typical key — at x512
@@ -486,7 +370,7 @@ def _hot_key_stats(
     """
     from pyspark import StorageLevel
 
-    # Null-component keys are never hot BY CONTRACT: _hot_sliced flags hot
+    # Null-component keys are never hot BY CONTRACT: _sliced flags hot
     # keys via a plain equi-join, which a null component can never match —
     # so marking one hot could not route it anyway. Routing-only effect
     # (results stay bit-identical); the null group still contributes to
@@ -495,7 +379,7 @@ def _hot_key_stats(
     for c in key_cols:
         keys_non_null = keys_non_null & F.col(c).isNotNull()
 
-    if hot_threshold > _PROBE_SAMPLE_TARGET:
+    if _HOT_THRESHOLD > _PROBE_SAMPLE_TARGET:
         # Footer fast path (r11): no key can be hot when the TOTAL row count
         # cannot exceed the threshold — the parquet footers answer that with
         # zero jobs (the sampled probe's one scan was ~0.3 s of every
@@ -503,9 +387,9 @@ def _hot_key_stats(
         # to the probe's by construction (per-key count ≤ total ≤ threshold),
         # and the caller never reads the bounds on the no-hot route.
         bound = _static_row_bound(df)
-        if bound is not None and bound <= hot_threshold:
+        if bound is not None and bound <= _HOT_THRESHOLD:
             return (0.0, 0.0), None
-        f = _PROBE_SAMPLE_TARGET / float(hot_threshold)
+        f = _PROBE_SAMPLE_TARGET / float(_HOT_THRESHOLD)
         cand = (
             df.sample(fraction=f, seed=42)
             .filter(keys_non_null)
@@ -541,7 +425,7 @@ def _hot_key_stats(
         F.min(ts_expr).alias("_mn"),
         F.max(ts_expr).alias("_mx"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    is_hot = (F.col("_hn") > hot_threshold) & hot_eligible
+    is_hot = (F.col("_hn") > _HOT_THRESHOLD) & hot_eligible
     row = stats.agg(
         F.min("_mn").alias("_lo"),
         F.max("_mx").alias("_hi"),
@@ -554,258 +438,35 @@ def _hot_key_stats(
     return (float(lo), float(hi)), hot
 
 
-def _hot_sliced(
-    d: DataFrame,
-    key_cols: list[str],
-    hot: DataFrame | None,
-    time_slice,
-) -> DataFrame:
-    """Attach ``_slice``: the time-bucket id for hot keys, 0 for everyone
-    else (broadcast left join on the bounded hot-key set; no join at all
-    when nothing is hot)."""
+def _sliced(df: DataFrame, key_cols: list[str], ts_expr) -> DataFrame | None:
+    """The hot-key route decision: ``None`` when no key is hot (the caller
+    partitions on ``key_cols`` alone — the plain window plan), else ``df``
+    with ``_slice`` attached, and the caller partitions on
+    ``key_cols + ["_slice"]``.
+
+    ``_slice`` is the hot key's fixed-width global time bucket of
+    ``ts_expr`` over the probe's exact ``(lo, hi)`` (``_N_SLICES`` buckets;
+    monotone in ``ts_expr``, so ties share a slice and concatenating a
+    key's slices in order is its global order), and 0 for every cold key —
+    a cold key's single slice IS its whole timeline. Hot keys are flagged
+    by a broadcast left join on the bounded hot-key set."""
+    (lo, hi), hot = _hot_key_stats(df, key_cols, ts_expr)
     if hot is None:
-        return d.withColumn("_slice", F.lit(0).cast("bigint"))
+        return None
+    width = max((hi - lo) / _N_SLICES, 1e-9)
+    slice_id = F.least(
+        F.floor((ts_expr - F.lit(lo)) / F.lit(width)), F.lit(_N_SLICES - 1)
+    ).cast("bigint")
     flagged = F.broadcast(hot.withColumn("_hot", F.lit(True)))
     return (
-        d.join(flagged, key_cols, "left")
+        df.join(flagged, key_cols, "left")
         .withColumn(
             "_slice",
-            F.when(F.col("_hot").isNotNull(), time_slice)
+            F.when(F.col("_hot").isNotNull(), slice_id)
             .otherwise(F.lit(0))
             .cast("bigint"),
         )
         .drop("_hot")
-    )
-
-
-def _range_probe(df: DataFrame, col) -> tuple[float, float]:
-    """Driver-side (lo, hi) of a numeric column — TWO scalars of driver
-    state, bounded by construction (the repo's annotated-collect
-    convention). Collected rather than cross-joined: a broadcast singleton
-    attach plans as BroadcastNestedLoopJoin (Catalyst constant-folds any
-    literal equi-key back to a nested loop), which breaks consumers whose
-    audited design promise is "no BNLJ anywhere in the plan", and the
-    collected literals keep the slice expression foldable. Returns (0, 0)
-    on an empty/all-null frame — every downstream slice lands on 0 and the
-    frame is empty anyway."""
-    row = df.agg(F.min(col).alias("_lo"), F.max(col).alias("_hi")).collect()[0]
-    lo = row["_lo"]
-    hi = row["_hi"]
-    return (float(lo), float(hi)) if lo is not None else (0.0, 0.0)
-
-
-def gaps_scalable(
-    df: DataFrame,
-    part_cols: list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-    out: str = "gap",
-    n_slices: int = 256,
-    hot_threshold: int = 200_000,
-) -> DataFrame:
-    """Consecutive inter-arrival gaps of ``ts_col`` within each
-    ``part_cols`` group WITHOUT the per-key single-task window — for
-    consumers that only aggregate the gaps (mean/variance/count are
-    combinable, so the gap MULTISET is all that matters, not its order).
-
-    Same slice trick as :func:`sessionize_scalable`: ``n_slices`` global
-    time buckets from one 2-scalar driver-collected min/max probe
-    (:func:`_range_probe`); within-``(key, slice)``
-    lag gives the intra-slice gaps; the per-``(key, slice)`` first/last
-    summary (≤ ``n_slices`` rows per key, bounded by construction) yields
-    each boundary gap via a lag over slices. Union = every consecutive gap
-    exactly once: slicing is monotone in ``ts_col`` (ties share a slice),
-    so concatenating slices in order is the group's global order, and
-    min/max per slice ARE the first/last rows' timestamps.
-
-    ``ts_col`` must be numeric (cast timestamps first). Returns
-    ``part_cols + [out]`` with one row per consecutive pair (n−1 per
-    group); order-insensitive by contract.
-
-    This is the ROW-LEVEL form — use it only when individual gap rows are
-    consumed downstream. Consumers that only aggregate combinable moments
-    of the gaps (every production consumer today) should use
-    :func:`gap_moments_scalable`, which collapses to summary grain inside
-    the window stage and measured 18.8 → 6.5 s at x512
-    (events_interarrival_profile, SCALE_RUN.json).
-
-    Hot-routed slicing (r10, same rationale as :func:`sessionize_scalable`):
-    only keys above ``hot_threshold`` rows are time-sliced; cold keys take
-    slice 0 (plain lag, no boundary rows), and when NO key is hot the plan
-    is the plain window form outright.
-    """
-    tie = list(tiebreak_cols or [])
-    ts = F.col(ts_col)
-    (lo, hi), hot = _hot_key_stats(df, part_cols, ts, hot_threshold)
-    if hot is None:
-        w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-        return df.select(
-            *part_cols, (ts - F.lag(ts).over(w)).alias(out)
-        ).filter(F.col(out).isNotNull())
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((ts - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, part_cols, hot, slice_id)
-    # Persisted for the same reason as sessionize_scalable's d: the
-    # within-slice branch and the boundary-summary branch both read it.
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    w_in = Window.partitionBy(*part_cols, "_slice").orderBy(ts_col, *tie)
-    within = d.select(
-        *part_cols, (ts - F.lag(ts).over(w_in)).alias(out)
-    ).filter(F.col(out).isNotNull())
-    summ = d.groupBy(*part_cols, "_slice").agg(
-        F.min(ts).alias("_first"), F.max(ts).alias("_last")
-    )
-    w_s = Window.partitionBy(*part_cols).orderBy("_slice")
-    boundary = summ.select(
-        *part_cols,
-        (F.col("_first") - F.lag("_last").over(w_s)).alias(out),
-    ).filter(F.col(out).isNotNull())
-    return within.unionAll(boundary)
-
-
-def sessionize_scalable(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    n_slices: int = 256,
-    gap_units: int | None = None,
-    tiebreak_cols: list[str] | None = None,
-    hot_threshold: int = 200_000,
-) -> DataFrame:
-    """:func:`sessionize` WITHOUT the per-user single-task window — the
-    100 TB form for hot keys (a bot/celebrity user owning a large share of
-    the events puts its whole timeline in ONE task under
-    ``partitionBy(user)``; AQE cannot split a window partition).
-
-    Hot-routed bucket-and-stitch (r10; the r9 form sliced EVERY user and
-    fragmented the typical ~95-event timeline across 256 global time
-    buckets — fragmentation 0.959 measured at x512, see
-    :func:`_hot_key_stats`):
-
-    0. One key-grain stats pass → global ts range + the hot-key set
-       (> ``hot_threshold`` events; ``|hot| ≤ N/hot_threshold`` by
-       construction, so the broadcast is provably safe). Cold users take
-       ``_slice = 0`` — a single slice, whose stitch below degenerates to
-       the plain window form with zero fragments. No hot keys at all →
-       the plain lag-gap window directly (no slicing machinery in the
-       plan).
-    1. HOT users slice into ``n_slices`` fixed-width global time buckets;
-       a hot timeline now spreads across up to ``n_slices`` tasks.
-    2. Lag-gap cumulative sum WITHIN each ``(user, slice)`` partition →
-       local session index ``_ls`` (1-based; the slice's first event is
-       always flagged locally new).
-    3. Per-``(user, slice)`` summary: first/last event second and local
-       session count. At most ``n_slices`` rows per user — bounded by
-       construction, independent of event count — so the stitch window
-       ``partitionBy(user).orderBy(_slice)`` is safe at any scale.
-    4. Stitch: slice k merges into the previous non-empty slice's last
-       session iff the boundary gap ≤ the session gap. With
-       ``D_k = Σ_{j≤k} (n_local_j − merge_j)`` distinct sessions after
-       slice k, the global id of local session s in slice k is
-       ``D_{k−1} − merge_k + s`` (merge maps local 1 onto the previous
-       global session; the first slice has merge 0).
-    5. Join the per-slice offset back on ``(user, slice)`` — a hash join
-       on the partitioning the window already produced.
-
-    Session ids are bit-identical to the window form on BOTH routes
-    (equal-second ties share a slice because slicing is monotone in the
-    truncated second — trivially so at slice 0 — and a zero gap never
-    opens a session, so tie order is immaterial in both forms) — pinned by
-    tests/test_windows_scalable.py against :func:`sessionize` including
-    hot-key, mixed-population, and boundary-spanning shapes.
-
-    The per-task row bound for a cold user is ``hot_threshold`` (one
-    window task sorts at most that many rows per key); a hot user's is
-    ~``its_count/n_slices``. The stats pass costs one extra combinable
-    aggregate scan — the price that bought fragmentation ~0.
-
-    This is the ROW-LEVEL form — use it only when per-event session ids
-    are consumed downstream. Consumers that only read per-session
-    AGGREGATES (every production consumer today) should use
-    :func:`sessionize_agg_scalable`, which drops this form's persist,
-    offset join-back, and final full shuffle (x512: 16.3 → 10.1 s on
-    events_sessionization, SCALE_RUN.json).
-    """
-    # gap_units: gap threshold in ts_col's own numeric units (e.g. a
-    # unix_micros column with gap_units=1_800_000_000) — overrides
-    # gap_minutes, which assumes ts_col casts to epoch SECONDS (timestamp
-    # columns; the cast truncates, matching the window-form convention).
-    # tiebreak_cols: within-slice ordering after ts (session ids are
-    # tie-order-invariant — a zero gap never opens a session — but callers
-    # that ALSO read per-session order downstream pass their total order).
-    gap_sec = gap_units if gap_units is not None else gap_minutes * 60
-    tie = list(tiebreak_cols or [])
-    tss = F.col(ts_col).cast("long")
-    (lo, hi), hot = _hot_key_stats(df, [user_col], tss, hot_threshold)
-    if hot is None:
-        # Nothing can straggle: the plain window form IS the optimal plan
-        # (one corpus exchange, no slicing machinery, no join-back).
-        return sessionize(
-            df, user_col, ts_col, gap_minutes,
-            gap_units=gap_units, tiebreak_cols=tiebreak_cols,
-        )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((tss - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, [user_col], hot, slice_id)
-    w_in = Window.partitionBy(user_col, "_slice").orderBy(ts_col, *tie)
-    gap = tss - F.lag(tss).over(w_in)
-    new_local = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    d = d.withColumn(
-        "_ls", F.sum(new_local).over(w_in.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    # Persist the sliced+locally-sessionized frame: both the summary branch
-    # and the final join-back consume it, and without the persist each
-    # branch re-scans the source AND re-runs the window (4 scans where 2
-    # do — plan_audit's scan budget). Persist-and-let-LRU-evict lifecycle,
-    # same as q_mlprep's feats persist.
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    # Summary grain: ≤ n_slices rows per user. min/max of the truncated
-    # second ARE the first/last rows' seconds (the second is nondecreasing
-    # in ts order), so the boundary gap below is computed in the same
-    # truncated-long space as the window form's lag.
-    summ = d.groupBy(user_col, "_slice").agg(
-        F.min(tss).alias("_first"),
-        F.max(tss).alias("_last"),
-        F.max("_ls").alias("_nloc"),
-    )
-    w_s = Window.partitionBy(user_col).orderBy("_slice")
-    merge = F.when(
-        (F.col("_first") - F.lag("_last").over(w_s)) <= gap_sec, 1
-    ).otherwise(0)
-    summ = summ.withColumn("_merge", merge)
-    w_prev = w_s.rowsBetween(Window.unboundedPreceding, -1)
-    offsets = summ.select(
-        user_col,
-        "_slice",
-        (
-            F.coalesce(F.sum(F.col("_nloc") - F.col("_merge")).over(w_prev), F.lit(0))
-            - F.col("_merge")
-        ).alias("_off"),
-    )
-    # Null-safe stitch keys: a plain equi-join would silently DROP
-    # null-keyed rows (and null-ts rows on a sliced key) that the window
-    # form keeps as ordinary partitions — the r10 null-key parity test
-    # caught exactly that. eqNullSafe stays a hash-joinable equi-key.
-    off = offsets.withColumnRenamed(user_col, "_sk").withColumnRenamed(
-        "_slice", "_ss"
-    )
-    return (
-        d.join(
-            off,
-            F.col(user_col).eqNullSafe(F.col("_sk"))
-            & F.col("_slice").eqNullSafe(F.col("_ss")),
-        )
-        .withColumn("session_id", F.col("_off") + F.col("_ls"))
-        .drop("_slice", "_ls", "_off", "_sk", "_ss")
     )
 
 
@@ -816,71 +477,67 @@ def sessionize_agg_scalable(
     local_aggs: list[Column],
     merge_aggs: list[Column],
     gap_minutes: int = 30,
-    n_slices: int = 256,
     gap_units: int | None = None,
     tiebreak_cols: list[str] | None = None,
-    hot_threshold: int = 200_000,
 ) -> DataFrame:
-    """:func:`sessionize_scalable` fused with a session-grain aggregate —
-    for the (common) consumer that only ever reads per-session AGGREGATES,
-    never the row-level session labels.
+    """Lag-gap sessionization (SURVEY.md §2.8: a new session starts when
+    the gap to the user's previous event exceeds the threshold) fused with
+    a session-grain aggregate, WITHOUT the per-user single-task window —
+    the 100 TB form for hot keys (a bot/celebrity user owning a large share
+    of the events puts its whole timeline in ONE task under
+    ``partitionBy(user)``; AQE cannot split a window partition).
 
-    Every production consumer of :func:`sessionize_scalable` follows it
-    with ``groupBy(user, session_id).agg(...)`` over re-aggregable
+    Every consumer reads per-session AGGREGATES over re-aggregable
     functions (count→sum, min/max→min/max, min_by carried with its key,
-    collect_list merged by flatten+sort). For those, joining the stitch
-    offsets back onto the FULL event frame — and then shuffling that full
-    frame again to (user, session_id) grain — moves two corpus-sized
-    frames that never needed to exist. This form aggregates DOWN TO
-    SESSION GRAIN while the data is still partitioned by the bucket
-    window, and everything after the one big shuffle is session-grain:
+    collect_list merged by flatten+sort), never per-event labels, so the
+    corpus collapses to session grain while it is still partitioned by the
+    session window:
 
-    1. Slice + within-``(user, slice)`` lag-gap cumsum → ``_ls``
-       (identical to :func:`sessionize_scalable` steps 1–2; the only
-       corpus-sized shuffle in the plan).
-    2. ``groupBy(user, _slice, _ls).agg(*local_aggs)`` — the grouping
+    1. :func:`_sliced` routes: hot users get a time ``_slice``; with no hot
+       user the window partitions on ``user_col`` alone.
+    2. Lag-gap cumulative sum within each partition → local session index
+       ``_ls`` (1-based; a slice's first event is always locally new). The
+       only corpus-sized shuffle in the plan.
+    3. ``groupBy(partition keys, _ls).agg(*local_aggs)`` — the grouping
        keys are a superset of the window's partition keys, so Catalyst
-       plans NO exchange here: the corpus collapses to local-session
-       grain inside the same stage. ``s_first_tss``/``s_last_tss``
-       (min/max of the cast-to-long timestamp) are always added for the
-       stitch and are visible to ``merge_aggs``.
-    3. The per-``(user, slice)`` stitch summary, offsets window, and
-       offset join all run on the step-2 frame — ≤ one row per local
-       session, bounded session grain (worst case one row per event when
-       every event is its own session, i.e. never worse than the
-       row-level form's join-back).
-    4. ``groupBy(user, session_id).agg(*merge_aggs)`` merges the
-       fragments of boundary-spanning sessions. Session ids are the same
-       ``D_{k-1} − merge_k + s`` stitch as :func:`sessionize_scalable` —
-       bit-identical to the window form (pinned in
-       tests/test_windows_scalable.py).
+       plans NO exchange here. ``s_first_tss``/``s_last_tss`` (min/max of
+       the cast-to-long timestamp) are always added for the stitch and are
+       visible to ``merge_aggs``. With no hot user ``_ls`` IS the session
+       id (the stitch is the identity) and step 4 is skipped: one corpus
+       exchange, no join, no persist.
+    4. Stitch (sliced route, on the persisted local-session frame — ≤ one
+       row per local session, never worse than one row per event): slice
+       k merges into the previous non-empty slice's last session iff the
+       boundary gap ≤ the session gap. With ``D_k = Σ_{j≤k} (n_local_j −
+       merge_j)`` distinct sessions after slice k, the global id of local
+       session s in slice k is ``D_{k−1} − merge_k + s``. The per-(user,
+       slice) summary has ≤ ``_N_SLICES`` rows per user, so the stitch
+       window ``partitionBy(user).orderBy(_slice)`` is bounded at any
+       scale; the offsets join back null-safely.
+    5. ``groupBy(user, session_id).agg(*merge_aggs)`` merges the fragments
+       of boundary-spanning sessions.
+
+    Session ids are bit-identical to the plain window form on both routes
+    (equal-second ties share a slice and a zero gap never opens a session,
+    so tie order is immaterial) — pinned in tests/test_windows_scalable.py.
+    Measured: x512 events_sessionization 16.3 → 10.1 s vs the row-level
+    stitch with a corpus-sized join-back; skew 1.61 → 0.94 at x32 with a
+    25%-hot user (SCALE_RUN.json).
+
+    ``gap_units`` is the threshold in ``ts_col``'s own numeric units (e.g.
+    a unix_micros column with ``gap_units=1_800_000_000``) and overrides
+    ``gap_minutes``, which assumes ``ts_col`` casts to epoch SECONDS (the
+    cast truncates). ``tiebreak_cols`` extend the within-session order
+    after ``ts_col`` for consumers whose aggregates read that order.
 
     ``local_aggs`` see the input columns (evaluated once per LOCAL
     session fragment); ``merge_aggs`` see the ``local_aggs`` output
     columns plus ``s_first_tss``/``s_last_tss`` and must re-aggregate
     (e.g. local ``count(*) as n`` merges as ``sum(n) as n``). Output:
-    ``(user_col, session_id, *merge_aggs)``.
-
-    vs the row-level form at sf0.1 (events, 32 threads): the persist of
-    the corpus-sized sliced frame, the full-frame offset join, and the
-    consumer's full-frame (user, session_id) shuffle all disappear —
-    the plan is scan → window+local agg → session-grain stitch. The
-    x512 spill named on SCALE_RUN's r512_128=5.05 row was exactly the
-    row-level persisted frame.
-
-    Hot-routed slicing (r10): only users above ``hot_threshold`` events
-    are time-sliced; everyone else takes ``_slice = 0``, so a cold user's
-    local sessions ARE its global sessions and ``loc`` below collapses to
-    true session grain instead of the fragmented near-corpus grain the
-    slice-everyone r9 form produced (fragmentation 0.959 at x512 — see
-    :func:`_hot_key_stats`). The stitch runs uniformly on both routes
-    (single-slice stitch is the identity), so ids stay bit-identical.
-
-    Reserved intermediate columns: ``_slice``, ``_ls``, ``_hot``,
-    ``s_first_tss``, ``s_last_tss`` (the last two are part of the
-    contract — ``merge_aggs`` read them). The input frame and
-    ``local_aggs`` aliases must not use the other three; asserted below
-    (ADVICE r9 #1).
+    ``(user_col, session_id, *merge_aggs)``. Reserved intermediate
+    columns ``_slice``, ``_ls``, ``_hot`` must not appear in the input or
+    as ``local_aggs`` aliases (nor may those alias the two stitch bounds);
+    asserted below (ADVICE r9 #1).
     """
     reserved = {"_slice", "_ls", "_hot"}
     clash = reserved & set(df.columns)
@@ -900,52 +557,29 @@ def sessionize_agg_scalable(
     gap_sec = gap_units if gap_units is not None else gap_minutes * 60
     tie = list(tiebreak_cols or [])
     tss = F.col(ts_col).cast("long")
-    (lo, hi), hot = _hot_key_stats(df, [user_col], tss, hot_threshold)
-    if hot is None:
-        # No-hot fast path (r10): with every key at a single slice the
-        # stitch is the identity (D_{-1}=0, merge_0=0 → session_id = _ls),
-        # so the persist, slice-summary window, offsets window, and the
-        # join-back all drop out of the plan. What remains is the minimal
-        # fused form: ONE corpus exchange (the session window), then two
-        # no-exchange aggregates (grouping keys ⊇ the window's partition
-        # key). merge_aggs still run — over single-fragment groups they
-        # are exact re-aggregations — so output columns and values are
-        # bit-identical to the stitched route (pinned in
-        # tests/test_windows_scalable.py).
-        w = Window.partitionBy(user_col).orderBy(ts_col, *tie)
-        gap0 = tss - F.lag(tss).over(w)
-        new0 = F.when(gap0.isNull() | (gap0 > gap_sec), 1).otherwise(0)
-        d0 = df.withColumn(
-            "_ls", F.sum(new0).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    sliced = _sliced(df, [user_col], tss)
+    parts = [user_col] if sliced is None else [user_col, "_slice"]
+    w = Window.partitionBy(*parts).orderBy(ts_col, *tie)
+    gap = tss - F.lag(tss).over(w)
+    new_sess = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
+    loc = (
+        (df if sliced is None else sliced)
+        .withColumn(
+            "_ls", F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0))
         )
-        loc0 = d0.groupBy(user_col, "_ls").agg(
+        .groupBy(*parts, "_ls")
+        .agg(
             F.min(tss).alias("s_first_tss"),
             F.max(tss).alias("s_last_tss"),
             *local_aggs,
         )
+    )
+    if sliced is None:
         return (
-            loc0.withColumn("session_id", F.col("_ls"))
+            loc.withColumn("session_id", F.col("_ls"))
             .groupBy(user_col, "session_id")
             .agg(*merge_aggs)
         )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((tss - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, [user_col], hot, slice_id)
-    w_in = Window.partitionBy(user_col, "_slice").orderBy(ts_col, *tie)
-    gap = tss - F.lag(tss).over(w_in)
-    new_local = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    d = d.withColumn(
-        "_ls", F.sum(new_local).over(w_in.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    # Local-session grain: no exchange (grouping keys ⊇ window partition
-    # keys). This is where the corpus-sized frame dies.
-    loc = d.groupBy(user_col, "_slice", "_ls").agg(
-        F.min(tss).alias("s_first_tss"),
-        F.max(tss).alias("s_last_tss"),
-        *local_aggs,
-    )
     # Persisted for the stitch's two consumers (summary + offset join) —
     # session grain, so the footprint is bounded by the session count,
     # not the corpus. Persist-and-let-LRU-evict lifecycle.
@@ -974,9 +608,9 @@ def sessionize_agg_scalable(
             - F.col("_merge")
         ).alias("_off"),
     )
-    # Null-safe stitch keys — same rationale as sessionize_scalable's
-    # join-back (a plain equi-join drops null-keyed/null-ts rows the
-    # window form keeps).
+    # Null-safe stitch keys: a plain equi-join would silently DROP
+    # null-keyed (and null-ts) fragments that the window form keeps as
+    # ordinary partitions. eqNullSafe stays a hash-joinable equi-key.
     off = offsets.withColumnRenamed(user_col, "_sk").withColumnRenamed(
         "_slice", "_ss"
     )
@@ -1000,26 +634,27 @@ def gap_moments_scalable(
     tiebreak_cols: list[str] | None = None,
     moment_aggs: list[Column] | None = None,
     gap_col: str = "gap",
-    n_slices: int = 256,
-    hot_threshold: int = 200_000,
 ) -> DataFrame:
-    """:func:`gaps_scalable` fused with the per-key gap aggregate — for
-    consumers that only read combinable MOMENTS of the gap multiset
-    (count/sum/sum-of-squares — mean, rate, cv), never individual gaps.
+    """Combinable MOMENTS of the consecutive inter-arrival gaps of
+    ``ts_col`` within each ``part_cols`` group (count/sum/sum-of-squares —
+    mean, rate, cv) WITHOUT the per-key single-task window. Only the gap
+    multiset matters, not its order.
 
-    :func:`gaps_scalable` persists the corpus-sized sliced frame because
-    its two branches (within-slice lags, boundary summary) both scan it,
-    and returns one row per gap for the caller to aggregate. Here both
-    branches collapse inside the window stage: the within-slice gaps
-    partial-aggregate to ``(part_cols, _slice)`` grain with NO exchange
-    (grouping keys ⊇ the lag window's partition keys), the boundary gaps
-    come from the same tiny frame's slice-lag, and the union the caller
-    aggregates is summary-grain — no persist, no corpus-sized union, one
-    corpus shuffle total.
+    :func:`_sliced` routes hot keys into time slices. Within each window
+    partition the lag gives the intra-slice gaps, which partial-aggregate
+    with NO exchange (grouping keys ⊇ the lag window's partition keys).
+    On the sliced route the same pass keeps each (key, slice) cell's
+    first/last ``ts_col``, and a lag over slices yields each boundary gap:
+    the union is every consecutive gap exactly once, because slicing is
+    monotone in ``ts_col``. With no hot key the boundary branch (provably
+    empty at a single slice) and the persist drop out: one corpus shuffle.
+    Measured x512 events_interarrival_profile 18.8 → 6.5 s vs the
+    row-level gap form (SCALE_RUN.json).
 
-    ``moment_aggs`` are evaluated over ``F.col(gap_col)`` at BOTH grains
-    and must be combinable by plain re-aggregation downstream (the
-    default: ``n/s/ssq`` with the exact DECIMAL(19,0) convention of
+    ``ts_col`` must be numeric (cast timestamps first). ``moment_aggs``
+    are evaluated over ``F.col(gap_col)`` at BOTH grains and must be
+    combinable by plain re-aggregation downstream (the default: ``n_gaps/
+    s/ssq`` with the exact DECIMAL(19,0) convention of
     events_interarrival_profile — order-independent integer sums, so the
     two-level aggregation is bit-equal to the flat one). Returns
     ``part_cols + moment_agg columns`` at ``(part_cols, _slice)``-grain ∪
@@ -1027,16 +662,9 @@ def gap_moments_scalable(
 
     Output-row caveat (ADVICE r9 #3, part of the return contract): a
     single-event (key, slice) cell emits a row with ZERO-valued moments
-    (``n_gaps = 0`` under the default aggs) where :func:`gaps_scalable`
-    emits no row at all — consumers that count keys or join on the output
-    must filter (``n_gaps > 0``) first, as events_interarrival_profile
-    does.
-
-    Hot-routed slicing (r10, same rationale as :func:`sessionize_scalable`):
-    cold keys take slice 0 — their cell IS the whole key, so the r9 form's
-    "gap cells compress poorly" corpus-sized persist collapses to key
-    grain — and when no key is hot, the boundary branch (provably empty at
-    a single slice) and the persist are skipped outright.
+    (``n_gaps = 0`` under the default aggs) where the gap multiset has no
+    row at all — consumers that count keys or join on the output must
+    filter (``n_gaps > 0``) first, as events_interarrival_profile does.
     """
     tie = list(tiebreak_cols or [])
     ts = F.col(ts_col)
@@ -1048,44 +676,30 @@ def gap_moments_scalable(
             F.sum(gd).alias("s"),
             F.sum(gd * gd).alias("ssq"),
         ]
-    (lo, hi), hot = _hot_key_stats(df, part_cols, ts, hot_threshold)
-    if hot is None:
-        w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-        return (
-            df.withColumn(gap_col, ts - F.lag(ts).over(w))
-            .groupBy(*part_cols)
-            .agg(*moment_aggs)
-        )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((ts - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, part_cols, hot, slice_id)
-    w_in = Window.partitionBy(*part_cols, "_slice").orderBy(ts_col, *tie)
-    d = d.withColumn(gap_col, ts - F.lag(ts).over(w_in))
+    sliced = _sliced(df, part_cols, ts)
+    parts = list(part_cols) if sliced is None else [*part_cols, "_slice"]
+    w = Window.partitionBy(*parts).orderBy(ts_col, *tie)
+    d = (df if sliced is None else sliced).withColumn(gap_col, ts - F.lag(ts).over(w))
+    if sliced is None:
+        return d.groupBy(*parts).agg(*moment_aggs)
     # One pass: per-(key, slice) gap moments AND the slice's first/last
-    # timestamp (for boundary gaps) — grouping keys ⊇ window partition
-    # keys, so the corpus collapses to summary grain with no exchange.
-    loc = d.groupBy(*part_cols, "_slice").agg(
-        F.min(ts).alias("_first"),
-        F.max(ts).alias("_last"),
-        *moment_aggs,
-    )
-    # Persisted: the union's two branches (cell moments, boundary gaps)
-    # both read loc, and without the persist the corpus-sized window
-    # stage runs twice (measured at x512: 34.4 s vs ~18 s — the fused
-    # form's one saved shuffle is worth nothing if the window re-runs).
-    # Unlike the session fusion, gap cells compress poorly for sparse
-    # keys (≈ one event per (key, slice) cell at 256 global time
-    # slices), so loc is corpus-ish at scale — persist-and-let-LRU-evict.
+    # timestamp (for boundary gaps). Persisted: the union's two branches
+    # both read loc, and without the persist the corpus-sized window stage
+    # runs twice (measured at x512: 34.4 s vs ~18 s). Gap cells compress
+    # poorly for sparse hot keys, so loc can be corpus-ish at scale —
+    # persist-and-let-LRU-evict.
     from pyspark import StorageLevel
 
-    loc = loc.persist(StorageLevel.MEMORY_AND_DISK)
+    loc = (
+        d.groupBy(*parts)
+        .agg(F.min(ts).alias("_first"), F.max(ts).alias("_last"), *moment_aggs)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     w_s = Window.partitionBy(*part_cols).orderBy("_slice")
     boundary = (
         loc.withColumn(gap_col, F.col("_first") - F.lag("_last").over(w_s))
         .filter(F.col(gap_col).isNotNull())
-        .groupBy(*part_cols, "_slice")
+        .groupBy(*parts)
         .agg(*moment_aggs)
     )
     out_cols = [c for c in loc.columns if c not in ("_first", "_last")]

@@ -109,7 +109,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows via lag-gap cumulative sum (30-min gap) — the batch
     equivalent of a streaming session window (SURVEY.md §2.8)."""
     e = load(spark, "events", sf_dir)
-    return session_stats(e, gap_minutes=30).select(
+    return session_stats(e).select(
         "user_id",
         F.col("session_id").cast("long").alias("session_id"),
         "n_events",
@@ -2171,7 +2171,7 @@ def events_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside DAU/WAU stickiness. One window pass builds sessions, then two
     tiny aggregates; integer counts, round(6) on the ratio."""
     e = load(spark, "events", sf_dir)
-    sess = session_stats(e, gap_minutes=30).select(
+    sess = session_stats(e).select(
         "user_id", "session_id", "n_events", "start_tss"
     )
     return (

@@ -34,22 +34,25 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Session windows via lag-gap cumulative sum; per-session event count and
+#: Inactivity gap that closes a session (the clickstream convention).
+_GAP_MINUTES = 30
+
+
+def session_stats(events: DataFrame) -> DataFrame:
+    """Session windows via lag-gap cumulative sum (a gap over
+    ``_GAP_MINUTES`` opens a session); per-session event count and
     duration seconds.
 
-    Uses the bucket-and-stitch form: a hot user (bot/celebrity — measured
+    Uses the slice-and-stitch form: a hot user (bot/celebrity — measured
     1.61× skew at x32 with a 25%-hot key on the plain window form,
     SCALE_RUN.json) no longer serializes into one task (measured 0.74
-    post-fix; the skew-split ``sessionize_auto`` variant measured WORSE on
-    both axes at every observable tier — see its docstring — so the pure
-    form is the production path). Every stat here is a re-aggregable
-    session aggregate (count→sum, min/max of the session bounds), so the
-    SESSION-GRAIN fused form applies: the corpus collapses to local-session
-    grain inside the bucket-window stage, and the stitch, offset join, and
-    final merge all run on session-grain frames — no corpus-sized persist
-    or join-back (``sessionize_agg_scalable``'s docstring has the plan
-    delta). Projected to the two consumed columns before sessionizing."""
+    post-fix). Every stat here is a re-aggregable session aggregate
+    (count→sum, min/max of the session bounds), so the SESSION-GRAIN fused
+    form applies: the corpus collapses to local-session grain inside the
+    session-window stage, and any stitch runs on session-grain frames —
+    no corpus-sized persist or join-back (``sessionize_agg_scalable``'s
+    docstring has the plan). Projected to the two consumed columns before
+    sessionizing."""
     return sessionize_agg_scalable(
         events.select("user_id", "ts"),
         "user_id",
@@ -60,5 +63,5 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             (F.max("s_last_tss") - F.min("s_first_tss")).alias("duration_sec"),
             F.min("s_first_tss").alias("start_tss"),
         ],
-        gap_minutes=gap_minutes,
+        gap_minutes=_GAP_MINUTES,
     )

@@ -32,7 +32,7 @@ def _indirect(x):
     # attribute-style reference through a module object
     from seoul_big_data_spark.operators import windows
 
-    return windows.sessionize_scalable  # noqa: B018 — reference, not call
+    return windows.sessionize_agg_scalable  # noqa: B018 — reference, not call
 
 
 _PKG_SELF = __name__  # pytest may import this file under a different name
@@ -60,7 +60,7 @@ def test_oracle_change_changes_fingerprint():
 def test_module_attribute_references_resolved():
     cl = source_closure(_indirect)
     names = {q for _, q in cl}
-    assert "sessionize_scalable" in names
+    assert "sessionize_agg_scalable" in names
 
 
 def test_r9_regression_sessionization_closure_is_deep():
@@ -72,6 +72,17 @@ def test_r9_regression_sessionization_closure_is_deep():
     cl = source_closure(QUERIES["events_sessionization"])
     names = {q for _, q in cl}
     assert {"events_sessionization", "session_stats", "sessionize_agg_scalable"} <= names
+
+
+def test_relative_import_in_query_body_resolves_against_package():
+    """``from .operators.graph import pagerank`` inside a q_text query body
+    is relative to the ``seoul_big_data_spark`` package, not to the
+    ``seoul_big_data_spark.q_text`` module — resolved against the module, the
+    import fails silently and pagerank edits never re-front the query."""
+    from seoul_big_data_spark.queries import QUERIES
+
+    cl = source_closure(QUERIES["graph_pagerank_neardup"])
+    assert "pagerank" in {q for _, q in cl}
 
 
 def test_fingerprint_deterministic_across_calls():

@@ -1,8 +1,16 @@
-"""Write EXPLAIN.md: formatted physical plans for representative queries,
-each preceded by the scale property the plan is meant to exhibit (the
-prose half of what tools/plan_audit.py asserts mechanically).
+"""Formatted physical plans, two ways.
+
+Default: write EXPLAIN.md — plans for representative queries, each preceded
+by the scale property the plan is meant to exhibit (the prose half of what
+tools/plan_audit.py asserts mechanically).
+
+``--plans <tag> <sf_dir>``: write each query's plan at ``sf_dir`` to
+plans/<tag>/<query>.txt — the evidence files of a before/after plan
+comparison (dump both trees under two tags and diff). Queries default to
+bench.py's headline suite.
 
 Usage: python tools/explain_dump.py [sf_dir]
+       python tools/explain_dump.py --plans <tag> <sf_dir> [query ...]
 """
 
 from __future__ import annotations
@@ -10,7 +18,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
 from seoul_big_data_spark.queries import QUERIES  # noqa: E402
 from seoul_big_data_spark.session import get_spark  # noqa: E402
@@ -122,19 +131,18 @@ SHOWCASE = [
     ),
     (
         "events_sessionization",
-        "Hot-routed session-grain fused bucket-and-stitch (r10, "
-        "windows.sessionize_agg_scalable): a key-grain stats pass "
-        "(combinable aggregate -> 3 collected scalars) finds hot users; "
-        "only THEY are time-sliced, everyone else takes slice 0 — so the "
-        "r9 fragmentation (global-time slices made 'session grain' ~= "
-        "corpus grain, measured 0.959 at x512) is gone, and with no hot "
-        "user the plan IS the plain window form plus the stats scan. "
-        "Still ONE corpus-sized exchange — the (user, slice) bucket "
-        "window; the per-session aggregate's grouping keys are a superset "
-        "of the window partition keys, so the corpus collapses to session "
-        "grain with NO second exchange; stitch summary, offsets window, "
-        "offset join, fragment merge all session-grain. Hot keys spread "
-        "across n_slices tasks (skew 1.61 -> 0.94 at x32, 25%-hot user).",
+        "Hot-routed session-grain fused slice-and-stitch "
+        "(windows.sessionize_agg_scalable): the parquet footer row count "
+        "(past it, a sampled probe) decides whether any user is hot. With "
+        "none — this plan — it is the plain window form: ONE corpus-sized "
+        "exchange on user_id, and the per-session aggregate's grouping "
+        "keys are a superset of the window partition keys, so the corpus "
+        "collapses to session grain with NO second exchange, no join and "
+        "no persist. A hot user is time-sliced across _N_SLICES tasks "
+        "(everyone else stays at slice 0, so global-time slicing cannot "
+        "fragment the typical user) and the stitch summary, offsets "
+        "window, offset join and fragment merge all run at session grain "
+        "(skew 1.61 -> 0.94 at x32, 25%-hot user).",
     ),
     (
         "similarity_ivf_pq_ann",
@@ -149,10 +157,36 @@ SHOWCASE = [
 ]
 
 
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump_plans(tag: str, sf_dir: str, names: list[str]) -> None:
+    if not names:
+        from bench import HEADLINE
+
+        names = HEADLINE
+    out_dir = os.path.join(HERE, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("explain_dump")
+    for name in names:
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(_formatted(QUERIES[name](spark, sf_dir)))
+        print(f"wrote {path}")
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--plans"]:
+        if len(sys.argv) < 4:
+            sys.exit("usage: explain_dump.py --plans <tag> <sf_dir> [query ...]")
+        dump_plans(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("explain_dump")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = [
         "# EXPLAIN — representative physical plans\n",
         "Generated by `tools/explain_dump.py` at sf0.01 (plans are "
@@ -162,12 +196,9 @@ def main() -> None:
         "mechanically on every round.\n",
     ]
     for name, prop in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _formatted(QUERIES[name](spark, sf_dir))
         out.append(f"\n## {name}\n\n{prop}\n\n```\n{plan}\n```\n")
-    with open(os.path.join(here, "EXPLAIN.md"), "w") as fh:
+    with open(os.path.join(HERE, "EXPLAIN.md"), "w") as fh:
         fh.write("".join(out))
     print("wrote EXPLAIN.md")
 
