@@ -21,6 +21,14 @@ Run once per round, right after committing the new ``CORRECTNESS_r{N}.json``
 row is at least as new as the previously-recorded one, so an edit between
 gatings keeps the OLD certified hash and the mismatch is detected).
 
+The ledger must be hashed over the source that the new
+``CORRECTNESS_r{N}.json`` gated, not over today's tree. If the package has
+changed since the gating commit, run the current recorder and the current
+``seoul_big_data_spark/certhash.py`` (with the current ledger) over a
+``git archive`` of that commit and copy the resulting ledger back; run at
+HEAD instead, it would record the post-gating edits as certified and they
+would never re-front.
+
 Usage: python tools/record_cert_hashes.py
 """
 
