@@ -5,12 +5,12 @@ row numbering in input order (S4), resume-from-checkpoint offset filter (F6),
 positional schema binding (J3), append write (C6) and audit bookkeeping (A1/C8)
 — as set-oriented DataFrame transformations instead of a per-row INSERT loop.
 
-Scale notes (100 TB): the oracle-parity path uses a global ``row_number()``
-window, which sorts on a single reducer — correct, but serial. For real scale
-``numbered_by_partition`` computes contiguous ids with a two-pass
-per-partition-offset scheme (one tiny count-per-partition job + a map-side id
-assignment), which is fully parallel and preserves file order because Spark
-file splits are ordered.
+Scale notes (100 TB): ``numbered`` is a global ``row_number()`` window, which
+sorts on a single reducer — correct, but serial; it is the reference the
+parallel forms are tested against. A file scan is numbered in file order by
+``numbered_in_file_order`` (one small per-block count job, then a map-side
+id projection — no shuffle of the rows); a keyed order by
+``numbered_ordered_scalable``.
 """
 
 from __future__ import annotations
@@ -24,42 +24,56 @@ def numbered(df: DataFrame, order_by: list[str | Column] | None = None) -> DataF
 
     Mirrors the reference's physical-line numbering
     (data_seoul_2_csv_noopenapi.py:116,128). Global window = single-partition
-    sort; fine at test scale, see ``numbered_by_partition`` for the parallel
-    variant.
+    sort; fine at test scale, see ``numbered_in_file_order`` for the parallel
+    variant over a file scan.
     """
     order = order_by or [F.monotonically_increasing_id()]
     w = Window.orderBy(*order)
     return df.withColumn("ID", F.row_number().over(w))
 
 
-def numbered_by_partition(df: DataFrame) -> DataFrame:
-    """S4 at scale — contiguous 1-based ids without a global sort.
+def numbered_in_file_order(df: DataFrame) -> tuple[DataFrame, int]:
+    """S4 at scale — contiguous 1-based ``ID`` in file order, and the row count.
 
-    Two passes: (1) count rows per input partition (cheap job over already-
-    scanned data), (2) add each row's within-partition rank to the partition's
-    cumulative offset. Equivalent to RDD ``zipWithIndex`` but staying in the
-    DataFrame API via ``spark_partition_id``.
+    ``df`` must be a file scan with no operator in between: the order is
+    (``_metadata.file_path``, ``_metadata.file_block_start``) and then the
+    row's place in its block. One small aggregate collects, per block, its
+    row count and the smallest ``monotonically_increasing_id()`` of its rows.
+    A block is read by one task from start to end, so its rows carry
+    consecutive ids from that minimum on, and ``ID = mono + delta[block]`` is
+    a map-side projection, with ``delta`` = rows of the earlier blocks + 1 −
+    the block's minimum.
+
+    The partition index is part of ``mono``, so the counts and the frame
+    must be planned over the same files with the same split settings
+    (``spark.sql.files.*``); a block the counts did not see raises. Not
+    ``spark_partition_id()`` order: file bin-packing sorts splits by size,
+    which mixes files. The offset map is a literal with one entry per block
+    (a 1 GB file at the default 128 MB split is 8 entries).
     """
-    with_pid = df.withColumn("_pid", F.spark_partition_id())
-    # Pass 1: tiny driver-side offsets table (one row per partition).
+    block = F.struct(
+        F.col("_metadata.file_path").alias("path"),
+        F.col("_metadata.file_block_start").alias("start"),
+    )
+    mono = F.monotonically_increasing_id()
     counts = (
-        with_pid.groupBy("_pid").count().orderBy("_pid").collect()
-    )  # catalog-sized: #partitions rows, never data rows
-    offsets = {}
-    acc = 0
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    offset_col = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
+        df.select(block.alias("block"), mono.alias("mono"))
+        .groupBy("block")
+        .agg(F.count("*").alias("n"), F.min("mono").alias("first"))
+        .collect()
     )
-    # Pass 2: rank within partition (no shuffle — window partitioned by _pid).
-    w = Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
-    return (
-        with_pid.withColumn("_rn", F.row_number().over(w))
-        .withColumn("ID", (offset_col[F.col("_pid")] + F.col("_rn")).cast("int"))
-        .drop("_pid", "_rn")
-    )
+    deltas, total = [], 0
+    for (path, start), n, first in sorted(counts):
+        key = F.struct(
+            F.lit(path).alias("path"), F.lit(start).cast("long").alias("start")
+        )
+        deltas += [key, F.lit(total + 1 - first).cast("long")]
+        total += n
+    if not deltas:  # no data rows: nothing to number
+        return df.withColumn("ID", F.lit(None).cast("int")), 0
+    delta = F.create_map(*deltas)[block]
+    missing = F.raise_error(F.lit("input changed after its blocks were counted"))
+    return df.withColumn("ID", (mono + F.coalesce(delta, missing)).cast("int")), total
 
 
 def numbered_ordered_scalable(

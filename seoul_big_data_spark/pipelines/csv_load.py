@@ -5,10 +5,13 @@ dataset: derive NLDATA_/TMP_ names → latest checkpoint row → open CSV →
 ordered column metadata → per-line INSERT with row numbers and resume filter
 → audit UPDATE.
 
-Engine shape: the catalog joins are broadcast (J1/J2), the load is one lazy
-plan per dataset (C4→S4→F6→J3→C6), and the audit is a merge_update (C8).
-Catalog driving stays driver-side (it is catalog-sized); data never loops on
-the driver."""
+Engine shape: four Spark jobs per dataset, none of which moves data rows
+through one task. The checkpoint (a top-1 by ``id``) and the column rows are
+one catalog-sized collect each; the load is one lazy plan per dataset
+(C4→S4→F6→J3, sources/csv_ingest.py) whose per-block count job also gives the
+loaded row count; the audit (C8) is one projection over the checkpoint table
+that rewrites the checkpoint's row. Only catalog-sized rows are collected;
+data rows never loop in Python."""
 
 from __future__ import annotations
 
@@ -17,15 +20,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.windows import latest_per_group
 from ..sources.csv_ingest import load_csv_with_catalog_schema
-from ..sources.writers import merge_update
 
 
 @dataclass
 class LoadResult:
     staging: DataFrame  # typed rows that were (newly) loaded
-    ptable_updated: DataFrame  # audit table after the C8 merge
+    ptable_updated: DataFrame  # audit table with the C8 update applied
     table_name: str
     loaded_rows: int
 
@@ -50,11 +51,8 @@ def latest_checkpoint(ptable: DataFrame, dataset_id: int) -> tuple[int, int]:
     (ref: ORDER BY ID DESC + fetchall()[0], data_seoul_2_csv_noopenapi.py:
     74-79). Returns (manage_table_id, start_idx); driver-side single row."""
     row = (
-        latest_per_group(
-            ptable.filter(F.col("data_basic_id") == dataset_id),
-            ["data_basic_id"],
-            [F.desc("id")],
-        )
+        ptable.filter(F.col("data_basic_id") == dataset_id)
+        .orderBy(F.desc("id"))
         .select("id", "start_idx")
         .first()
     )
@@ -65,14 +63,14 @@ def latest_checkpoint(ptable: DataFrame, dataset_id: int) -> tuple[int, int]:
 
 def ordered_columns(pcolumn: DataFrame, physical_id: int) -> list[tuple[str, str]]:
     """C3 — ordered (name, type) pairs for one physical table
-    (ref: data_seoul_2_csv_noopenapi.py:89-96). Catalog-sized collect."""
+    (ref: data_seoul_2_csv_noopenapi.py:89-96). Catalog-sized collect, sorted
+    in Python: a Spark sort would add a sampling job."""
     rows = (
         pcolumn.filter(F.col("data_physical_id") == physical_id)
-        .orderBy("physical_column_order")
-        .select("physical_column_name", "physical_column_type")
+        .select("physical_column_order", "physical_column_name", "physical_column_type")
         .collect()
     )
-    return [(r[0], r[1]) for r in rows]
+    return [(name, ctype) for _, name, ctype in sorted(rows)]
 
 
 def run(
@@ -86,29 +84,29 @@ def run(
     """Load one dataset's CSV with resume semantics + audit bookkeeping."""
     physical_id, start_idx = latest_checkpoint(ptable, dataset_id)
     cols = ordered_columns(pcolumn, physical_id)
-    staging = load_csv_with_catalog_schema(
+    staging, total = load_csv_with_catalog_schema(
         spark,
         csv_path,
         column_names=[c for c, _ in cols],
         column_types=[t for _, t in cols],
         start_idx=start_idx,
     )
-    loaded = staging.count()
+    loaded = max(0, total - max(0, start_idx))  # rows the resume filter keeps
     # C8 audit: inserted flag, server-side now, cumulative row count
     # (ref: list_total_count seeded with start_idx,
-    #  data_seoul_2_csv_noopenapi.py:112,133-140).
-    audit = spark.createDataFrame(
-        [(physical_id,)], "id long"
-    ).select(
-        "id",
-        F.lit("Y").alias("data_inserted_yn"),
-        F.current_timestamp().alias("data_insert_date"),
-        F.lit(start_idx + loaded).cast("long").alias("data_insert_row"),
-    )
-    updated = merge_update(
-        ptable,
-        audit,
-        "id",
-        ["data_inserted_yn", "data_insert_date", "data_insert_row"],
+    #  data_seoul_2_csv_noopenapi.py:112,133-140), set on the checkpoint's row.
+    audit = {
+        "data_inserted_yn": F.lit("Y"),
+        "data_insert_date": F.current_timestamp(),
+        "data_insert_row": F.lit(start_idx + loaded).cast("long"),
+    }
+    is_checkpoint = F.col("id") == physical_id
+    updated = ptable.select(
+        *[
+            F.when(is_checkpoint, audit[c]).otherwise(F.col(c)).alias(c)
+            if c in audit
+            else F.col(c)
+            for c in ptable.columns
+        ]
     )
     return LoadResult(staging, updated, staging_table_name(dataset_id), loaded)

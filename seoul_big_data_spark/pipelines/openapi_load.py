@@ -7,10 +7,11 @@ branches) → derive table name (CamelCase→SNAKE_CASE) and COL_nnn column list
 load as pipeline 2.
 
 Engine shape: the schema-derivation phase is metadata-plane work — tiny
-inputs, runs eagerly to produce the StructType *before* the lazy data-plane
-load (SURVEY.md §3.3). The URL derivations are the X5-X9 column expressions
-applied to a one-row DataFrame so the logic is the same tested code that
-would run at scale over many datasets at once."""
+inputs, runs eagerly to produce the column names *before* the lazy data-plane
+load (SURVEY.md §3.3), which is pipeline 2's load (csv_load.run). The URL
+derivations are the X5-X8 column expressions applied to a one-row frame built
+in the JVM (one Spark job, no Python worker), so the logic is the same tested
+code that would run at scale over many datasets at once."""
 
 from __future__ import annotations
 
@@ -46,7 +47,9 @@ def derive_master_url(
     ``rsplit('/', 2)[0]``, default → ``rsplit('/', 3)[0]``; and id 239
     substitutes the *train* auth key (data_seoul_3_csv.py:94-97)."""
     key = auth_key_train if (dataset_id == 239 and auth_key_train) else auth_key
-    df = spark.createDataFrame([(dataset_id, sample_url)], "id long, url string")
+    df = spark.range(1, numPartitions=1).select(
+        F.lit(dataset_id).cast("long").alias("id"), F.lit(sample_url).alias("url")
+    )
     keyed = scalar.replace_literal(
         "url", "/sample/", F.concat(F.lit("/"), F.lit(key), F.lit("/"))
     )

@@ -544,7 +544,7 @@ def csv_roundtrip_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = os.path.join(tempfile.gettempdir(), "seoul_csv_roundtrip")
     sample.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-    out = load_csv_with_catalog_schema(
+    out, _ = load_csv_with_catalog_schema(
         spark,
         path,
         column_names=["COL_001", "COL_002", "COL_003"],

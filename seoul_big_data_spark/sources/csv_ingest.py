@@ -1,25 +1,25 @@
 """CSV source (SURVEY.md §2.1 C4 + F5): the reference's per-line reader
 (data_seoul_2_csv_noopenapi.py:81-87,113-128) as a declarative scan.
 
-All columns are read as strings (``inferSchema=False``) mirroring the
-reference's strings-only model (§1.2); typed casts are applied explicitly
-from the catalog's declared types (plans/schema_from_catalog.py) — the
-engine-side version of "the DB coerces on INSERT"."""
+All columns are read as strings, mirroring the reference's strings-only model
+(§1.2); typed casts are applied explicitly from the catalog's declared types
+(plans/schema_from_catalog.py) — the engine-side version of "the DB coerces
+on INSERT".
+
+Engine shape: the schema comes from the catalog's column rows, so the scan
+launches no header-inference job; the rows are numbered in file order by
+``operators.ingest.numbered_in_file_order`` (one per-block count job, then a
+map-side projection), which also returns the row count, so the load needs no
+separate count. The staging plan reads the CSV once, with no shuffle."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.ingest import bind_schema, numbered, resume_filter
+from ..operators.ingest import numbered_in_file_order, resume_filter
 from ..plans.schema_from_catalog import spark_type_for
-
-
-def read_csv_all_strings(
-    spark: SparkSession, path: str, header: bool = True
-) -> DataFrame:
-    """C4/F5 — CSV scan, header skipped by the reader (not a post-filter)."""
-    return spark.read.csv(path, header=header, inferSchema=False)
 
 
 def load_csv_with_catalog_schema(
@@ -28,20 +28,25 @@ def load_csv_with_catalog_schema(
     column_names: list[str],
     column_types: list[str] | None = None,
     start_idx: int = 0,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """The full reference load semantics as one lazy plan:
     scan → S4 row-number (file order) → F6 resume filter → J3 positional
     bind → explicit type coercion. Returns the typed staging DataFrame with
-    the leading 1-based ``ID`` column (data_seoul_2_csv_noopenapi.py:103)."""
-    raw = read_csv_all_strings(spark, path)
-    out = numbered(raw)
-    out = resume_filter(out, start_idx)
-    out = out.select("ID", *raw.columns)
-    out = bind_schema(out, ["ID", *column_names])
+    the leading 1-based ``ID`` column (data_seoul_2_csv_noopenapi.py:103) and
+    the number of data rows in the file, before the resume filter.
+
+    J3 binds by position: the scan's schema is the catalog's names, all
+    strings, and the header line is skipped, not read. ``FAILFAST`` makes a
+    row with more or fewer fields than the catalog has columns raise when the
+    frame runs, instead of being truncated or null-filled (SURVEY §7.4.3)."""
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in column_names])
+    raw = spark.read.csv(path, schema=schema, header=True, mode="FAILFAST")
+    out, total = numbered_in_file_order(raw)
+    out = resume_filter(out, start_idx).select("ID", *column_names)
     if column_types:
         for name, ctype in zip(column_names, column_types):
             out = out.withColumn(name, F.col(name).cast(spark_type_for(ctype)))
-    return out
+    return out, total
 
 
 def read_csv_quarantined(

@@ -2,10 +2,12 @@
 
 The reference's row-at-a-time INSERT loop (data_seoul_2_csv_noopenapi.py:
 122-125) becomes a set-oriented ``df.write`` append; its in-place catalog
-UPDATEs (data_seoul_1_category.py:80-83, data_seoul_2_csv_noopenapi.py:
-133-140) become the join-then-overwrite ``merge_update`` — plain-parquet
-MERGE semantics (Delta/Iceberg would provide it natively; the pattern is the
-same join, so swapping the sink later changes no call sites).
+UPDATEs of many rows (data_seoul_1_category.py:80-83) become the
+join-then-overwrite ``merge_update`` — plain-parquet MERGE semantics
+(Delta/Iceberg would provide it natively; the pattern is the same join, so
+swapping the sink later changes no call sites). The one-row audit UPDATE
+(data_seoul_2_csv_noopenapi.py:133-140) needs no join: pipelines/csv_load.py
+rewrites that row in a projection.
 
 Scale notes: ``append_table`` partitions by dataset id so downstream reads
 partition-prune; ``merge_update`` broadcasts the updates side (catalog-sized

@@ -40,16 +40,6 @@ def test_resume_partition_union_equals_full(spark, sf_dir):
     assert head.unionByName(tail).distinct().count() == numbered.count()
 
 
-def test_numbered_by_partition_matches_windowed(spark, sf_dir):
-    li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_linenumber")
-    out = ingest.numbered_by_partition(li)
-    n = li.count()
-    ids = out.agg(
-        F.min("ID").alias("lo"), F.max("ID").alias("hi"), F.count_distinct("ID").alias("d")
-    ).first()
-    assert (ids["lo"], ids["hi"], ids["d"]) == (1, n, n)
-
-
 def test_bind_schema_positional(spark, sf_dir):
     li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_linenumber")
     out = ingest.load_with_resume(li, 0, ["COL_001", "COL_002"])

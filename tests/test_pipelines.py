@@ -170,6 +170,48 @@ def test_csv_load_union_property(spark, catalog, ptable, pcolumn, csv_file):
     assert head.unionByName(part).select("ID").distinct().count() == 7
 
 
+def _jobs(spark, fn):
+    """(fn's result, the number of Spark jobs it launched), counted through a
+    job group as perfbench counts them."""
+    sc = spark.sparkContext
+    group = f"jobs-{fn.__name__}-{id(fn)}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_csv_load_job_and_plan_shape(spark, catalog, ptable, pcolumn, csv_file, tmp_path):
+    """Four jobs per load (checkpoint, columns, per-block counts); a staging
+    plan without a shuffle and an audit rewrite without a join."""
+    read = {}
+    for name, df in (("ptable", ptable), ("pcolumn", pcolumn)):
+        df.write.parquet(str(tmp_path / name))
+        read[name] = spark.read.parquet(str(tmp_path / name))
+
+    def load():
+        return csv_load.run(
+            spark, catalog, read["ptable"], read["pcolumn"], csv_file, 5758
+        )
+
+    res, n_jobs = _jobs(spark, load)
+    assert n_jobs <= 4
+    staging_plan = res.staging._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in staging_plan
+    audit_plan = res.ptable_updated._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in audit_plan
+
+    def write_audit():
+        res.ptable_updated.write.parquet(str(tmp_path / "audit"))
+
+    _, n_jobs = _jobs(spark, write_audit)
+    assert n_jobs <= 1
+
+
 # --- pipeline 3: OpenAPI-driven load ----------------------------------------
 
 _SPEC_PAGE = """
@@ -225,6 +267,16 @@ def test_master_url_branches(spark):
     # id=240 ≡ rsplit('/', 2)[0]
     out240 = openapi_load.derive_master_url(spark, url, 240, "K")
     assert out240 == slashed.rsplit("/", 2)[0] == "http://openapi.example/K/xml/TbThing/1"
+
+
+def test_master_url_launches_at_most_one_job(spark):
+    url = "http://openapi.example/sample/xml/TbThing/1/5/"
+
+    def derive():
+        return openapi_load.derive_master_url(spark, url, dataset_id=1, auth_key="K")
+
+    _, n_jobs = _jobs(spark, derive)
+    assert n_jobs <= 1
 
 
 # --- merge_update unit ------------------------------------------------------
