@@ -1,9 +1,11 @@
 """Resumable bulk ingest — the reference's core capability as one lazy plan.
 
-Re-expresses the CSV load loop (ref: data_seoul_2_csv_noopenapi.py:113-128):
-row numbering in input order (S4), resume-from-checkpoint offset filter (F6),
-positional schema binding (J3), append write (C6) and audit bookkeeping (A1/C8)
-— as set-oriented DataFrame transformations instead of a per-row INSERT loop.
+Re-expresses two steps of the CSV load loop
+(ref: data_seoul_2_csv_noopenapi.py:113-128) as set-oriented DataFrame
+transformations instead of a per-row INSERT loop: row numbering in input or
+key order (S4) and the resume-from-checkpoint offset filter (F6). The
+pipeline's schema binding (J3) lives in
+``sources/csv_ingest.py::load_csv_with_catalog_schema``.
 
 Scale notes (100 TB): ``numbered`` is a global ``row_number()`` window, which
 sorts on a single reducer — correct, but serial; it is the reference the
@@ -176,30 +178,3 @@ def resume_filter(df: DataFrame, start_idx: int, id_col: str = "ID") -> DataFram
     """
     return df.filter((F.lit(start_idx) == 0) | (F.col(id_col) > start_idx))
 
-
-def bind_schema(df: DataFrame, names: list[str]) -> DataFrame:
-    """J3 — positional CSV↔metadata binding resolved at plan time.
-
-    The reference binds by field position inside the row loop
-    (data_seoul_2_csv_noopenapi.py:117-118); here the collected column
-    metadata renames the scan output once, before execution.
-    """
-    return df.toDF(*names)
-
-
-def load_with_resume(
-    df: DataFrame,
-    start_idx: int = 0,
-    column_names: list[str] | None = None,
-) -> DataFrame:
-    """The M1 flagship composition: number → resume-filter → bind schema."""
-    out = numbered(df)
-    out = resume_filter(out, start_idx)
-    if column_names:
-        out = bind_schema(out, ["ID", *column_names])
-    return out
-
-
-def audit_counts(df: DataFrame, dataset_col: str) -> DataFrame:
-    """A1/C8 — per-dataset loaded-row counts for the audit table."""
-    return df.groupBy(dataset_col).agg(F.count("*").alias("data_insert_row"))

@@ -2436,6 +2436,11 @@ def events_markov_absorbing_conversion(spark: SparkSession, sf_dir: str) -> Data
     Python loop sums in sorted-t order — deterministic, and inside the
     round(6) both engines already rely on (Spark's own partial-agg order
     was nondeterministic before).
+
+    The returned frame is a snapshot fixed when this function is called:
+    both collects run while it is built, and the result is a driver-side
+    ``createDataFrame`` of the fixed point. Re-running an action on it does
+    not re-read ``events``; call the function again for fresh data.
     """
     ev = load(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

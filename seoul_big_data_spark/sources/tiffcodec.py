@@ -137,6 +137,11 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
         prefix = bytes([b])
     if prefix:
         emit(table[prefix])
+        # the decoder adds one more entry on reading this last code, so it
+        # may widen before EOI; EOI must go out at that width
+        next_code += 1
+        if next_code == (1 << width) and width < 12:
+            width += 1
     emit(EOI)
     if acc_bits:
         out.append((acc << (8 - acc_bits)) & 0xFF)

@@ -235,6 +235,38 @@ def test_tiff_roundtrip_property(
     assert np.array_equal(dec[0], img)
 
 
+def test_tiff_lzw_eoi_after_final_code_widens():
+    """The decoder adds a table entry on reading the last data code, so when
+    that entry lands on an early-change boundary (511/1023/2047) it reads
+    EOI one bit wider; the encoder must write EOI at that width."""
+    import random
+
+    from seoul_big_data_spark.sources.tiffcodec import (
+        _tiff_lzw_decode,
+        _tiff_lzw_encode,
+    )
+
+    rnd = random.Random(3)
+    data = bytes(rnd.randrange(256) for _ in range(4000))
+    # replay the encoder's dictionary growth to find, for each boundary, the
+    # prefix length whose final code leaves next_code on it
+    table = {bytes([i]) for i in range(256)}
+    next_code, prefix, cuts = 258, b"", {}
+    for i, b in enumerate(data):
+        cand = prefix + bytes([b])
+        if cand in table:
+            prefix = cand
+        else:
+            table.add(cand)
+            next_code += 1
+            prefix = bytes([b])
+        if next_code in (511, 1023, 2047):
+            cuts.setdefault(next_code, i + 1)
+    assert sorted(cuts) == [511, 1023, 2047]
+    for n in cuts.values():
+        assert _tiff_lzw_decode(_tiff_lzw_encode(data[:n])) == data[:n]
+
+
 @_PROP
 @given(
     seed=st.integers(0, 2**31 - 1),

@@ -40,12 +40,6 @@ def test_resume_partition_union_equals_full(spark, sf_dir):
     assert head.unionByName(tail).distinct().count() == numbered.count()
 
 
-def test_bind_schema_positional(spark, sf_dir):
-    li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_linenumber")
-    out = ingest.load_with_resume(li, 0, ["COL_001", "COL_002"])
-    assert out.columns == ["ID", "COL_001", "COL_002"]
-
-
 def test_numbered_bucketed_matches_window(spark, sf_dir):
     """The quantile-bucketed two-pass numbering equals the global-window
     numbering row for row (unique order keys) — forced onto the bucketed
