@@ -90,9 +90,3 @@ def format_timestamp(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Col
     (ref: data_seoul_2_csv_noopenapi.py:71-72 ``strftime('%Y-%m-%d %H:%M:%S')``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, fmt)
-
-
-def now_formatted(fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """X11/X12 — client 'now' + server ``SYSDATE`` both become
-    ``current_timestamp()`` (ref: data_seoul_2_csv_noopenapi.py:134)."""
-    return F.date_format(F.current_timestamp(), fmt)

@@ -37,18 +37,6 @@ def exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Data
     )
 
 
-def exact_normalized(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup on whitespace/case-normalized text (hash-first window key;
-    see ``exact`` for why)."""
-    norm = F.array_join(tokens(F.lower(F.col(text_col))), " ")
-    w = Window.partitionBy(F.xxhash64(norm), norm).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
 def _portable_hash(col, seed: int):
     """First 8 md5 hex chars of '<seed>:<value>' as a bigint — the
     engine-independent hash family (same convention as q_sketches), so a

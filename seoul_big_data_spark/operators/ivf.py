@@ -34,24 +34,6 @@ def _lit_vec(vals: list[float]) -> F.Column:
     return lit_double_array(vals)
 
 
-def _normalized(vec: F.Column | str) -> F.Column:
-    """Unit-normalize a float array (zero vectors pass through unchanged) —
-    spherical k-means operates on directions, so cosine == dot thereafter."""
-    from ..functions.text import _bind
-
-    v = F.col(vec) if isinstance(vec, str) else vec
-    # norm let-bound (r10): referenced per ELEMENT inside the transform
-    # lambda, which Catalyst cannot CSE — O(dim²) per row un-bound (the
-    # kmeans_fit "_n projection" lesson, applied at expression level so
-    # every caller is safe by construction).
-    return _bind(
-        norm(v),
-        lambda n: F.when(
-            n > 0, F.transform(v, lambda x: x.cast("double") / n)
-        ).otherwise(F.transform(v, lambda x: x.cast("double"))),
-    )
-
-
 def _nearest_cell_struct(
     vec: F.Column | str, centroids: list[list[float]]
 ) -> F.Column:
@@ -112,13 +94,13 @@ def kmeans_fit(
     md5-deterministic sample (q_dq.py convention) and assign the full corpus
     once afterwards.
     """
-    # Norm materialized in a LOWER projection: `_normalized` inlines the
-    # O(dim) norm fold into the per-element transform lambda, which
-    # Catalyst cannot CSE through a higher-order function — O(dim^2) per
-    # row, measured 59 s just to normalize 256k dim-64 vectors at x128.
-    # With the fold evaluated once into a scalar column the same fill is
-    # ~2 s; CollapseProject keeps the split (the alias is non-cheap and
-    # referenced twice).
+    # Norm materialized in a LOWER projection: inlining the O(dim) norm
+    # fold into the per-element transform lambda would re-evaluate it per
+    # element, since Catalyst cannot CSE through a higher-order function —
+    # O(dim^2) per row, measured 59 s just to normalize 256k dim-64
+    # vectors at x128. With the fold evaluated once into a scalar column
+    # the same fill is ~2 s; CollapseProject keeps the split (the alias is
+    # non-cheap and referenced twice).
     # Null-vector contract is k-INDEPENDENT (ADVICE r6): drop null
     # embeddings once, before routing — previously the bulk path
     # (k >= bulk_assign_from) raised ValueError on a null vector while the
@@ -741,62 +723,3 @@ def ivf_pq_topk(
     ).select("query_id", "neighbor_id", cosine("q_vec", "pq_vec").alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-
-
-# --- index persistence: centroids/codebooks as tables ------------------------
-
-
-def save_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]] | None = None,
-) -> None:
-    """Persist a fitted vector index (IVF centroids, optionally PQ
-    codebooks) as plain parquet tables — the index artifact OUTLIVES the
-    session, so a nightly fit job and many probe jobs share one index
-    instead of each session re-running Lloyd (the in-session memoization
-    only helps within one process). Layout:
-
-      <path>/centroids/  rows (cell, centroid array<double>)
-      <path>/codebooks/  rows (subspace, code, vec array<double>)
-
-    Tiny catalog-sized state; written through the normal parquet writer so
-    it inherits atomic job commit."""
-    spark.createDataFrame(
-        [(i, list(c)) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    if codebooks is not None:
-        rows = [
-            (s, c, list(vec))
-            for s, cb in enumerate(codebooks)
-            for c, vec in enumerate(cb)
-        ]
-        spark.createDataFrame(
-            rows, "subspace int, code int, vec array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
-
-
-def load_index(
-    spark, path: str
-) -> tuple[list[list[float]], list[list[list[float]]] | None]:
-    """Load a persisted index; returns (centroids, codebooks-or-None),
-    reconstructed in fit order so probes are bit-identical to the session
-    that wrote it (pinned in tests/test_ivf.py)."""
-    import os
-
-    c_rows = spark.read.parquet(path + "/centroids").collect()
-    centroids = [None] * len(c_rows)
-    for r in c_rows:
-        centroids[r["cell"]] = list(r["centroid"])
-    codebooks = None
-    cb_dir = path + "/codebooks"
-    if os.path.isdir(cb_dir):
-        cb_rows = spark.read.parquet(cb_dir).collect()
-        n_sub = max(r["subspace"] for r in cb_rows) + 1
-        n_code = max(r["code"] for r in cb_rows) + 1
-        codebooks = [[None] * n_code for _ in range(n_sub)]
-        for r in cb_rows:
-            codebooks[r["subspace"]][r["code"]] = list(r["vec"])
-    return centroids, codebooks

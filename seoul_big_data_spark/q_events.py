@@ -791,7 +791,7 @@ def events_rolling_median_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time axis collects the window's values, the median is pure array
     arithmetic (sort + midpoint, even windows interpolated). One shuffle on
     user_id; state per row is the trailing window — O(rate x horizon), the
-    same bound the streaming watermark layer guarantees. Exact where
+    same bound a streaming watermark guarantees. Exact where
     percentile_approx is not: both engines compute the identical
     sorted-midpoint convention, pinned by the hash match."""
     e = load(spark, "events", sf_dir)
@@ -931,8 +931,7 @@ def events_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame
     NATIVE-vs-reconstruction comparison must adopt the native boundary.
 
     session_window aggregates by (key, merged window) in one pass — no
-    window-function shuffle chain — and the same expression works under
-    readStream + watermark unchanged (streaming/structured.py)."""
+    window-function shuffle chain."""
     e = load(spark, "events", sf_dir)
     return (
         e.groupBy(
@@ -1771,12 +1770,10 @@ def events_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_throttle_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debounce/throttle: suppress events arriving within 60 s of the
-    previous event of the same (user, type) — the batch twin of streaming's
-    `dropDuplicatesWithinWatermark` dedup window (streaming/sinks.py::
-    dedup_within_watermark), here as a declarative lag predicate so the
-    batch and stream paths share semantics. Reports per-key totals vs
-    survivors. One shuffle on the composite key; deterministic tie-break by
-    event_id in the lag ordering."""
+    previous event of the same (user, type), as a declarative lag
+    predicate. Reports per-key totals vs survivors. One shuffle on the
+    composite key; deterministic tie-break by event_id in the lag
+    ordering."""
     e = load(spark, "events", sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     us = F.col("ts").cast("long") * 1000000
@@ -1824,9 +1821,8 @@ def events_out_of_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-orderness profile: each event's lateness versus the maximum
     event-time already seen in ARRIVAL order, banded — THE measurement that
     sizes a streaming watermark (`withWatermark` delay should cover the
-    observed lateness tail; `events_throttle_debounce` /
-    `dedup_within_watermark` inherit it). The synthetic events table is
-    perfectly time-ordered, so arrival is modeled as event-time plus a
+    observed lateness tail; `events_throttle_debounce` inherits it). The
+    synthetic events table is perfectly time-ordered, so arrival is modeled as event-time plus a
     deterministic md5 transport jitter (0–2 h) — the portable stand-in for
     the network/partition delays that produce disorder in any real feed;
     on data with a real arrival id, substitute that column.

@@ -871,8 +871,8 @@ def mlprep_logreg_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decimal->double cast is exact on both engines; and the Cramer
     solve is ONE shared Python expression tree rendered as Spark Columns
     here and as SQL text in the oracle, giving identical float op order.
-    tests/test_logreg.py pins this step against logreg_fit_irls(n_iter=1)
-    on the same features."""
+    tests/test_logreg.py pins this step against one iteration of an
+    independent numpy IRLS on the same features."""
     d = load(spark, "documents", sf_dir)
     scale = lambda c, k: c.cast("decimal(12,3)") * F.lit(k).cast("decimal(4,3)")  # noqa: E731
     n_tok = tx.token_count("text").cast("decimal(12,3)")
@@ -936,8 +936,8 @@ def mlprep_logreg_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark-first shape: each of the 6 steps is ONE distributed hash aggregate
 # over the column-pruned feature projection (map-side combine; shuffle
 # carries O(partitions x 14) decimals, independent of N) and an O(1)
-# driver solve — the logreg_fit_irls scale story with the numpy batch
-# kernel replaced by codegen'd decimal expressions. The final sigmoid
+# driver solve — the sufficient-statistics IRLS shape, with the numeric
+# kernel as codegen'd decimal expressions. The final sigmoid
 # scoring pass rides the same cached projection.
 # ---------------------------------------------------------------------------
 

@@ -34,16 +34,6 @@ from .registry import query
 from .sources.tables import load
 
 
-def _md5_bucket(col, salt: int, width: int):
-    """Portable hash bucket: first 8 hex chars of md5('<salt>:'||key) mod
-    width — byte-identical in DuckDB via ('0x'||substr(md5(...),1,8))::BIGINT.
-    8 hex chars < 2^32, so the conv() string→bigint cast is exact."""
-    s = F.concat(F.lit(f"{salt}:"), col.cast("string"))
-    return (F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint") % width).alias(
-        f"b{salt}"
-    )
-
-
 @query(
     "agg_countmin_heavy_hitters",
     """

@@ -1303,14 +1303,6 @@ def sample_frames(
                     for meta in avi_frame_stats(payload, every_k):
                         rows.append({"doc_id": doc_id, **meta})
                     continue
-                if payload[:9] == b"YUV4MPEG2":
-                    # Y4M: fixed frame size — the k-th frame's offset is
-                    # arithmetic, unsampled frames are never even sliced
-                    from .y4mcodec import y4m_frame_stats
-
-                    for meta in y4m_frame_stats(payload, every_k):
-                        rows.append({"doc_id": doc_id, **meta})
-                    continue
                 frames = split_ppm_stream(payload)
                 for i in range(0, len(frames), every_k):
                     meta = _decode_ppm(frames[i])

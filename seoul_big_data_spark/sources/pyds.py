@@ -20,14 +20,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
 class SyntheticSensorDataSource(DataSource):
@@ -68,132 +61,3 @@ class SyntheticSensorReader(DataSourceReader):
             u = int(hashlib.md5(f"v:{i}".encode()).hexdigest()[:8], 16) / 2**32
             yield (i, i % 10, u)
 
-
-class SyntheticSensorStreamDataSource(DataSource):
-    """Streaming twin of :class:`SyntheticSensorDataSource`: the same
-    deterministic readings delivered as micro-batches through
-    ``SimpleDataSourceStreamReader`` — offset = next reading id, so
-    restart/replay (``readBetweenOffsets``) regenerates byte-identical
-    batches, which is exactly the replayable-source contract Structured
-    Streaming's exactly-once model assumes. Bounded by ``n``: the stream
-    idles (empty batches) once all readings are emitted, so
-    ``trigger(availableNow=True)`` drains it and terminates.
-
-    Options: ``n`` total rows (default 1000), ``batch`` rows per
-    micro-batch (default 100)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_sensors_stream"
-
-    def schema(self) -> str:
-        return "reading_id bigint, sensor_id int, value double"
-
-    def simpleStreamReader(self, schema) -> "SyntheticSensorStreamReader":
-        return SyntheticSensorStreamReader(self.options)
-
-
-def _sensor_row(i: int):
-    u = int(hashlib.md5(f"v:{i}".encode()).hexdigest()[:8], 16) / 2**32
-    return (i, i % 10, u)
-
-
-class SyntheticSensorStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options) -> None:
-        self.n = int(options.get("n", 1000))
-        self.batch = max(int(options.get("batch", 100)), 1)
-
-    def initialOffset(self):
-        return {"next": 0}
-
-    def read(self, start):
-        lo = int(start["next"])
-        hi = min(lo + self.batch, self.n)
-        return iter([_sensor_row(i) for i in range(lo, hi)]), {"next": hi}
-
-    def readBetweenOffsets(self, start, end):
-        # deterministic replay: the offset range IS the data (pure function
-        # of reading id) — the property that makes failure recovery exact
-        return iter(
-            [_sensor_row(i) for i in range(int(start["next"]), int(end["next"]))]
-        )
-
-    def commit(self, end) -> None:
-        pass  # nothing external to acknowledge; offsets live in the checkpoint
-
-
-# --- custom WRITER: two-phase commit through the Python DataSource API -------
-
-
-class AuditedJsonlCommit(WriterCommitMessage):
-    """Per-task commit message: which file the task wrote and how many
-    rows it holds (picklable; travels executor → driver)."""
-
-    def __init__(self, file: str, rows: int) -> None:
-        self.file = file
-        self.rows = rows
-
-
-class AuditedJsonlDataSource(DataSource):
-    """Custom Python DataSource WRITER (Spark 4): JSON-lines sink with a
-    driver-side audit manifest — the two-phase commit surface. Each task
-    streams its partition to ``part-<pid>.jsonl`` and returns a commit
-    message; ``commit()`` runs once on the driver with ALL messages and
-    publishes ``_manifest.json`` (files + per-file and total row counts)
-    via write-temp-then-rename. Readers that resolve through the manifest
-    never see files from an uncommitted (failed/aborted) job — the same
-    visibility contract as sources/incremental.py, now behind the
-    standard ``df.write.format("audited_jsonl")`` call site. ``abort()``
-    removes the orphaned task files."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "audited_jsonl"
-
-    def writer(self, schema, overwrite: bool) -> "AuditedJsonlWriter":
-        return AuditedJsonlWriter(self.options)
-
-
-class AuditedJsonlWriter(DataSourceWriter):
-    def __init__(self, options) -> None:
-        self.path = options["path"]
-
-    def write(self, iterator) -> AuditedJsonlCommit:
-        import json as js
-        import os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        fname = os.path.join(self.path, f"part-{pid:05d}.jsonl")
-        rows = 0
-        with open(fname, "w") as fh:
-            for row in iterator:
-                fh.write(js.dumps(row.asDict(), default=str) + "\n")
-                rows += 1
-        return AuditedJsonlCommit(fname, rows)
-
-    def commit(self, messages) -> None:
-        import json as js
-        import os
-
-        manifest = {
-            "files": [
-                {"file": m.file, "rows": m.rows} for m in messages
-            ],
-            "total_rows": sum(m.rows for m in messages),
-        }
-        tmp = os.path.join(self.path, "_manifest.json.tmp")
-        with open(tmp, "w") as fh:
-            js.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.path, "_manifest.json"))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            try:
-                os.remove(m.file)
-            except OSError:
-                pass

@@ -103,120 +103,6 @@ def merge_upsert(
     return joined.select(*out_cols)
 
 
-def merge_upsert_partitioned(
-    spark,
-    path: str,
-    source: DataFrame,
-    key: str,
-    partition_col: str,
-    delete_condition: F.Column | None = None,
-) -> list:
-    """Partition-pruned MERGE over a parquet table partitioned by
-    ``partition_col`` — the Delta/Iceberg file-skipping shape on plain
-    parquet: only partitions PRESENT IN THE SOURCE are read, merged, and
-    rewritten (dynamic partition overwrite); every other partition's files
-    are never opened, never rewritten, mtimes untouched. Cost is
-    O(delta partitions), not O(table) like ``merge_upsert`` +
-    ``overwrite_table``.
-
-    Constraint (same as a partition-predicate-scoped Delta MERGE): a source
-    row for an EXISTING key must carry that key's current partition value —
-    a merge is not allowed to move rows across partitions, because the old
-    partition may not be in the pruned read set. New keys may land anywhere.
-
-    A partition whose rows are all deleted by ``delete_condition`` is
-    removed explicitly (dynamic overwrite only replaces partitions that
-    appear in the written data). Returns the affected partition values."""
-    import os
-    import shutil
-
-    parts = [
-        r[0] for r in source.select(partition_col).distinct().collect()
-    ]  # delta-sized: one small distinct, catalog-scale driver state
-    target = spark.read.parquet(path).filter(F.col(partition_col).isin(parts))
-    # A partitioned read surfaces the partition column last; align the
-    # source's column order to the on-disk layout before the merge.
-    merged = merge_upsert(
-        target, source.select(*target.columns), key, delete_condition
-    )
-    if delete_condition is None:
-        # No deletes → every affected partition keeps at least its source
-        # rows, so the survived set is known statically: no checkpoint, no
-        # second pass, the write below is the only action.
-        survived = set(parts)
-    else:
-        # Deletes may empty a partition; checkpoint the merge once so the
-        # survived-partition probe and the write share the materialized
-        # result instead of recomputing the join twice.
-        merged = merged.localCheckpoint(eager=True)
-        survived = {
-            r[0] for r in merged.select(partition_col).distinct().collect()
-        }
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    for p in set(parts) - survived:  # fully-deleted partitions
-        shutil.rmtree(os.path.join(path, f"{partition_col}={p}"), ignore_errors=True)
-    return parts
-
-
-def delete_where_partitioned(
-    spark,
-    path: str,
-    predicate: F.Column,
-    partition_col: str,
-    partition_values: list | None = None,
-) -> list:
-    """Partition-pruned DELETE over a parquet table partitioned by
-    ``partition_col``: rewrite ONLY the partitions that can contain
-    matching rows, keep every other partition's files untouched — the
-    DELETE-FROM-WHERE shape on plain parquet (the simpler cousin of
-    ``merge_upsert_partitioned``; an open table format swaps the
-    directory rewrite for a commit-log entry, same call site).
-
-    ``partition_values`` scopes the rewrite (the caller usually knows the
-    affected partitions — e.g. a GDPR purge keyed by ingest date); when
-    omitted, the affected set is discovered with one partition-pruned
-    aggregate over the predicate itself. Partitions left empty by the
-    delete are removed explicitly. Returns the rewritten partition
-    values."""
-    import os
-    import shutil
-
-    if partition_values is None:
-        partition_values = [
-            r[0]
-            for r in spark.read.parquet(path)
-            .filter(predicate)
-            .select(partition_col)
-            .distinct()
-            .collect()  # affected-partition list: catalog-sized
-        ]
-    if not partition_values:
-        return []
-    target = spark.read.parquet(path).filter(
-        F.col(partition_col).isin(partition_values)
-    )
-    kept = target.filter(~predicate).localCheckpoint(eager=True)
-    survived = {
-        r[0] for r in kept.select(partition_col).distinct().collect()
-    }
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    for p in set(partition_values) - survived:
-        shutil.rmtree(
-            os.path.join(path, f"{partition_col}={p}"), ignore_errors=True
-        )
-    return partition_values
-
-
 def cdc_apply(
     target: DataFrame,
     changes: DataFrame,
@@ -262,68 +148,6 @@ def cdc_apply(
     )
 
 
-def scd2_apply(
-    dim: DataFrame,
-    snapshot: DataFrame,
-    key: str,
-    tracked: list[str],
-    load_ts: str,
-    end_of_time: str = "9999-12-31 00:00:00",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2: maintain row history with
-    ``valid_from``/``valid_to``/``is_current`` columns.
-
-    ``dim`` carries (key, *tracked, valid_from, valid_to, is_current);
-    ``snapshot`` carries (key, *tracked) — the new full extract. Rows whose
-    tracked values changed are closed (valid_to = load_ts) and re-inserted
-    open; new keys are inserted open; unchanged and historical rows pass
-    through. One shuffle on the key; at scale, bucket the dimension on the
-    key and partition by ``is_current`` so the current slice prunes.
-
-    Change detection is null-safe (``eqNullSafe``) per tracked column."""
-    cur = dim.filter(F.col("is_current"))
-    hist = dim.filter(~F.col("is_current"))
-    snap = snapshot.select(
-        F.col(key).alias("_s_key"),
-        *[F.col(c).alias(f"_s_{c}") for c in tracked],
-    )
-    j = cur.join(snap, cur[key] == snap["_s_key"], "full_outer")
-    # Per-column null-safe comparison: concat_ws would SKIP nulls, conflating
-    # (NULL,'x') with ('x',NULL) and NULL with '' — missed changes.
-    same = F.lit(True)
-    for c in tracked:
-        same = same & F.col(c).eqNullSafe(F.col(f"_s_{c}"))
-    changed = ~same
-    closed = j.filter(
-        F.col(key).isNotNull() & F.col("_s_key").isNotNull() & changed
-    ).select(
-        F.col(key),
-        *[F.col(c) for c in tracked],
-        F.col("valid_from"),
-        F.lit(load_ts).cast("timestamp").alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    deleted_keep = j.filter(F.col("_s_key").isNull()).select(
-        F.col(key), *tracked, "valid_from", "valid_to", "is_current"
-    )
-    unchanged = j.filter(
-        F.col(key).isNotNull() & F.col("_s_key").isNotNull() & ~changed
-    ).select(F.col(key), *tracked, "valid_from", "valid_to", "is_current")
-    opened = j.filter(
-        F.col("_s_key").isNotNull()
-        & (F.col(key).isNull() | changed)
-    ).select(
-        F.col("_s_key").alias(key),
-        *[F.col(f"_s_{c}").alias(c) for c in tracked],
-        F.lit(load_ts).cast("timestamp").alias("valid_from"),
-        F.lit(end_of_time).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    return hist.unionByName(closed).unionByName(deleted_keep).unionByName(
-        unchanged
-    ).unionByName(opened)
-
-
 def snapshot_diff(
     old: DataFrame, new: DataFrame, key: str, compare_cols: list[str]
 ) -> DataFrame:
@@ -364,93 +188,3 @@ def snapshot_diff(
         .otherwise(F.lit(0))
         .alias("n_cols_changed"),
     )
-
-
-def snapshot_to_cdc(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    seq: int = 1,
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
-    """Derive the change feed BETWEEN two snapshots — the inverse of
-    ``cdc_apply``: applying the result to ``old`` reproduces ``new``
-    exactly (round-trip pinned in tests/test_merge_scd.py).
-
-    Classification is the same one null-safe full-outer join as
-    ``snapshot_diff``; unchanged keys emit nothing, so the feed is
-    delta-sized. This is how a snapshot-based source backfills a CDC
-    pipeline (or how two lake versions reconcile into an incremental
-    feed) without any engine-side change tracking."""
-    cols = old.columns
-    payload = [c for c in cols if c != key]
-    o = old.select(
-        F.col(key).alias("_o_key"),
-        *[F.col(c).alias(f"_o_{c}") for c in payload],
-    )
-    n = new.select(
-        F.col(key).alias("_n_key"),
-        *[F.col(c).alias(f"_n_{c}") for c in payload],
-    )
-    j = o.join(n, o["_o_key"] == n["_n_key"], "full_outer")
-    same = F.lit(True)
-    for c in payload:
-        same = same & F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
-    op = (
-        F.when(F.col("_o_key").isNull(), "I")
-        .when(F.col("_n_key").isNull(), "D")
-        .when(~same, "U")
-    )
-    return (
-        j.withColumn(op_col, op)
-        .filter(F.col(op_col).isNotNull())
-        .select(
-            F.coalesce(F.col("_n_key"), F.col("_o_key")).alias(key),
-            F.col(op_col),
-            F.lit(seq).alias(seq_col),
-            *[
-                F.coalesce(F.col(f"_n_{c}"), F.col(f"_o_{c}")).alias(c)
-                for c in payload
-            ],
-        )
-    )
-
-
-def compact_small_files(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Small-file compaction (the lakehouse OPTIMIZE kernel): size the
-    output file count from the actual on-disk bytes so each rewritten file
-    lands near ``target_bytes``, then atomically swap via a staged rewrite.
-    Returns the new file count.
-
-    Small files are the classic death-by-metadata failure at 100 TB (driver
-    listing, scan task explosion, row-group fragmentation); a periodic
-    compaction pass bounds file count by data volume. The rewrite is one
-    coalesce — no shuffle — so it only merges, never redistributes."""
-    import glob
-    import os
-    import shutil
-
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_bytes))
-    if n_out >= len(files):
-        return len(files)
-    df = spark.read.parquet(path)
-    staged = path.rstrip("/") + "._compact"
-    old = path.rstrip("/") + "._old"
-    # Crash-safe swap: each step is an atomic rename, so no window exists
-    # where the dataset is gone — a crash between the renames leaves the
-    # data intact under ._old (recoverable), never deleted. A failed staged
-    # write cleans up after itself.
-    try:
-        df.coalesce(n_out).write.mode("overwrite").parquet(staged)
-    except BaseException:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
-    return len(glob.glob(os.path.join(path, "*.parquet")))

@@ -248,40 +248,6 @@ def test_custom_datasource_partitions_and_determinism(spark):
     assert abs(a - b) < 1e-9  # values are a pure function of reading_id
 
 
-def test_custom_stream_datasource_drains_and_replays(spark, tmp_path):
-    from seoul_big_data_spark.sources.pyds import SyntheticSensorStreamDataSource
-
-    try:
-        spark.dataSource.register(SyntheticSensorStreamDataSource)
-    except Exception:
-        pass
-    stream = (
-        spark.readStream.format("synthetic_sensors_stream")
-        .option("n", 57)
-        .option("batch", 10)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("pyds_stream_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time
-
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if spark.sql("SELECT count(*) FROM pyds_stream_sink").first()[0] >= 57:
-            break
-        time.sleep(0.5)
-    q.stop()
-    got = spark.sql("SELECT reading_id, sensor_id FROM pyds_stream_sink").collect()
-    ids = sorted(r["reading_id"] for r in got)
-    assert ids == list(range(57))  # drained exactly once, no gaps/dups
-    assert all(r["sensor_id"] == r["reading_id"] % 10 for r in got)
-
-
 def test_observe_pipeline_metrics(spark, sf_dir):
     """df.observe(): in-flight pipeline metrics collected from the SAME
     pass that computes the result — the Spark-native replacement for the
@@ -383,36 +349,3 @@ def test_holt_forecast_matches_python_recursion(spark, sf_dir):
             level = nl
         for h in range(1, 8):
             assert abs(got[(et, h)] - round(level + h * trend, 6)) < 1e-9, (et, h)
-
-
-def test_audited_jsonl_writer_two_phase_commit(spark, sf_dir, tmp_path):
-    """Custom Python DataSource WRITER: per-task jsonl files + a
-    driver-side audit manifest published at commit. Round trip must
-    reproduce the rows; the manifest must reconcile with both the file
-    count and the row totals."""
-    import json
-    import os
-
-    from seoul_big_data_spark.sources.pyds import AuditedJsonlDataSource
-    from seoul_big_data_spark.sources.tables import load
-
-    spark.dataSource.register(AuditedJsonlDataSource)
-    out = str(tmp_path / "out")
-    src = (
-        load(spark, "nation", sf_dir)
-        .select("n_nationkey", "n_name")
-        .repartition(3)
-    )
-    src.write.format("audited_jsonl").mode("append").option(
-        "path", out
-    ).save()
-    with open(os.path.join(out, "_manifest.json")) as fh:
-        manifest = json.load(fh)
-    assert manifest["total_rows"] == src.count()
-    assert len(manifest["files"]) == 3
-    for f in manifest["files"]:
-        assert os.path.exists(f["file"])
-    back = spark.read.json([f["file"] for f in manifest["files"]])
-    assert {
-        (r["n_nationkey"], r["n_name"]) for r in back.collect()
-    } == {(r["n_nationkey"], r["n_name"]) for r in src.collect()}

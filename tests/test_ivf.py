@@ -141,38 +141,6 @@ def test_assign_cells_deterministic_under_repartition(spark, sf_dir):
     assert set(once.values()) <= set(range(K))
 
 
-def test_index_save_load_roundtrip_probe_identical(spark, sf_dir, tmp_path):
-    """A persisted index must reproduce the in-session probe exactly:
-    fit -> save -> load -> ivf_topk results identical (ids, ranks,
-    bit-equal centroids), and PQ codebooks survive the round trip."""
-    from seoul_big_data_spark.operators.ivf import (
-        ivf_topk,
-        kmeans_fit,
-        load_index,
-        save_index,
-    )
-    from seoul_big_data_spark.operators.pq import pq_fit
-    from seoul_big_data_spark.sources.tables import load
-
-    emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    cents = kmeans_fit(emb, k=4, iters=2)
-    cbs = pq_fit(emb, m=4, k=8, iters=2)
-    save_index(spark, str(tmp_path / "idx"), cents, cbs)
-    cents2, cbs2 = load_index(spark, str(tmp_path / "idx"))
-    assert cents2 == cents
-    assert cbs2 == cbs
-    probes = emb.filter(F.col("vec_id") < 5)
-    want = {
-        (r["query_id"], r["rk"], r["neighbor_id"])
-        for r in ivf_topk(emb, probes, cents, k=3, nprobe=2).collect()
-    }
-    got = {
-        (r["query_id"], r["rk"], r["neighbor_id"])
-        for r in ivf_topk(emb, probes, cents2, k=3, nprobe=2).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_assign_cells_bulk_matches_expression_path(spark, sf_dir):
     """The numpy-matmul assign (large-k path) must agree with the literal
     dot-expression assign cell-for-cell: both argmax raw-vector dots against

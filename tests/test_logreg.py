@@ -1,6 +1,6 @@
-"""Distributed IRLS logistic regression (operators/logreg.py) vs an
-independently-coded numpy IRLS on the same collected feature matrix: the
-sufficient-statistics path must reproduce the exact Newton iterates."""
+"""The shipped logistic-regression paths (q_mlprep's one-step Newton twin
+and its expression-IRLS) vs an independently-coded numpy IRLS on the same
+collected feature matrix."""
 
 from __future__ import annotations
 
@@ -8,18 +8,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from seoul_big_data_spark.functions import text as tx
-from seoul_big_data_spark.operators.logreg import logreg_fit_irls, logreg_score
 from seoul_big_data_spark.sources.tables import load
-
-
-def _features(spark, sf_dir):
-    d = load(spark, "documents", sf_dir)
-    return d.select(
-        F.log(F.col("n_chars") + 1.0).alias("f1"),
-        tx.token_count(F.col("text")).cast("double").alias("f2"),
-        (F.col("lang") == "en").cast("double").alias("y"),
-    )
 
 
 def _numpy_irls(x, y, n_iter=6, ridge=1e-6):
@@ -35,60 +24,34 @@ def _numpy_irls(x, y, n_iter=6, ridge=1e-6):
     return beta
 
 
-def test_irls_matches_numpy(spark, sf_dir):
-    feats = _features(spark, sf_dir)
-    got = logreg_fit_irls(feats, ["f1", "f2"], "y", n_iter=6)
-
-    rows = feats.collect()
-    x = np.array([[r["f1"], r["f2"]] for r in rows], dtype=np.float64)
-    y = np.array([r["y"] for r in rows], dtype=np.float64)
-    want = _numpy_irls(x, y)
-    np.testing.assert_allclose(got, want, rtol=1e-6, atol=1e-8)
-
-
-def test_scores_separate_and_calibrate(spark, sf_dir):
-    feats = _features(spark, sf_dir)
-    beta = logreg_fit_irls(feats, ["f1", "f2"], "y", n_iter=6)
-    scored = feats.withColumn("s", logreg_score(feats, ["f1", "f2"], beta))
-    r = scored.agg(
-        F.avg("s").alias("mean_s"), F.avg("y").alias("base_rate")
-    ).first()
-    # a fitted logistic model's mean prediction equals the base rate
-    # (score equation for the intercept) — a strong end-to-end invariant
-    assert abs(r["mean_s"] - r["base_rate"]) < 1e-6
-
-
 def test_newton_step_twin_matches_irls_first_iteration(spark, sf_dir):
     """The hash-checked one-step twin (mlprep_logreg_newton_step) must agree
-    with the engine operator run for exactly one iteration on the SAME
-    features — the link that makes the twin evidence FOR logreg_fit_irls,
-    not a parallel implementation. Tolerance covers the paths' different
-    accumulation (operator: float64 numpy partials; twin: exact decimal
+    with the independent numpy IRLS run for exactly one iteration on the
+    SAME features — the link that makes the twin evidence for IRLS, not a
+    parallel implementation. Tolerance covers the paths' different
+    accumulation (numpy: float64 over collected rows; twin: exact decimal
     sums rounded at scale 6)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from seoul_big_data_spark.operators.logreg import logreg_fit_irls
     from seoul_big_data_spark.q_mlprep import mlprep_logreg_newton_step
-    from seoul_big_data_spark.sources.tables import load
 
     d = load(spark, "documents", sf_dir)
     n_tok = F.size(F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != F.lit("")))
     n_punct = F.length("text") - F.length(
         F.regexp_replace("text", "[^a-zA-Z0-9 ]", "")
     )
-    feats = d.select(
+    rows = d.select(
         (F.col("n_chars") * 0.001).alias("f1"),
         (n_tok.cast("double") * 0.01).alias("f2"),
         (n_punct.cast("double") * 0.1).alias("f3"),
         (F.col("lang") == "en").cast("double").alias("y"),
-    )
-    beta_op = logreg_fit_irls(feats, ["f1", "f2", "f3"], "y", n_iter=1)
+    ).collect()
+    x = np.array([[r["f1"], r["f2"], r["f3"]] for r in rows], dtype=np.float64)
+    y = np.array([r["y"] for r in rows], dtype=np.float64)
+    beta_ref = _numpy_irls(x, y, n_iter=1)
     twin = mlprep_logreg_newton_step(spark, sf_dir).first()
     beta_twin = [twin[f"b{i}"] for i in range(4)]
-    assert np.allclose(beta_twin, beta_op, rtol=1e-4, atol=1e-5), (
+    assert np.allclose(beta_twin, beta_ref, rtol=1e-4, atol=1e-5), (
         beta_twin,
-        beta_op,
+        beta_ref,
     )
 
 

@@ -1,4 +1,4 @@
-"""MERGE upsert/delete and SCD2 dimension-history operators
+"""MERGE upsert/delete and CDC-apply operators
 (sources/writers.py — the Delta/Iceberg-style mutation surface expressed
 over immutable parquet frames)."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from seoul_big_data_spark.sources.writers import merge_upsert, scd2_apply
+from seoul_big_data_spark.sources.writers import merge_upsert
 
 
 @pytest.fixture
@@ -81,88 +81,6 @@ def _dim(spark, rows):
     )
 
 
-def test_scd2_change_new_delete_unchanged(spark):
-    eot = "9999-12-31 00:00:00"
-    dim = _dim(
-        spark,
-        [
-            (1, "alpha", "2020-01-01 00:00:00", eot, True),
-            (2, "beta", "2020-01-01 00:00:00", eot, True),
-            (3, "gamma", "2020-01-01 00:00:00", eot, True),
-            # pre-existing history row must pass through untouched
-            (2, "beta_v0", "2019-01-01 00:00:00", "2020-01-01 00:00:00", False),
-        ],
-    )
-    snapshot = spark.createDataFrame(
-        [(1, "alpha"),        # unchanged
-         (2, "beta_v2"),      # changed → close + reopen
-         (9, "iota")],        # new key → open; key 3 absent → kept current
-        "k int, name string",
-    )
-    out = scd2_apply(dim, snapshot, "k", ["name"], "2021-06-01 00:00:00")
-    rows = {(r["k"], r["name"]): r for r in out.collect()}
-    assert len(rows) == 6
-    # unchanged row stays current with original valid_from
-    r1 = rows[(1, "alpha")]
-    assert r1["is_current"] and str(r1["valid_from"]).startswith("2020-01-01")
-    # changed: old version closed at load_ts, new version opened
-    old2 = rows[(2, "beta")]
-    assert not old2["is_current"] and str(old2["valid_to"]).startswith("2021-06-01")
-    new2 = rows[(2, "beta_v2")]
-    assert new2["is_current"] and str(new2["valid_from"]).startswith("2021-06-01")
-    # deleted key keeps its current row (soft behavior, documented)
-    assert rows[(3, "gamma")]["is_current"]
-    # brand-new key opened
-    r9 = rows[(9, "iota")]
-    assert r9["is_current"] and str(r9["valid_from"]).startswith("2021-06-01")
-    # history passthrough
-    assert not rows[(2, "beta_v0")]["is_current"]
-
-
-def test_scd2_null_shift_detected_as_change(spark):
-    """(NULL,'x') → ('x',NULL) is a real change and NULL vs '' is a real
-    change — per-column eqNullSafe must catch both (regression: a single
-    concat_ws comparison skipped nulls and conflated them)."""
-    eot = "9999-12-31 00:00:00"
-    dim = (
-        spark.createDataFrame(
-            [
-                (1, None, "x", "2020-01-01 00:00:00", eot, True),
-                (2, None, "y", "2020-01-01 00:00:00", eot, True),
-            ],
-            "k int, a string, b string, valid_from string, valid_to string,"
-            " is_current boolean",
-        )
-        .withColumn("valid_from", F.col("valid_from").cast("timestamp"))
-        .withColumn("valid_to", F.col("valid_to").cast("timestamp"))
-    )
-    snapshot = spark.createDataFrame(
-        [(1, "x", None),   # null shifted across columns
-         (2, "", "y")],    # NULL vs '' on column a
-        "k int, a string, b string",
-    )
-    out = scd2_apply(dim, snapshot, "k", ["a", "b"], "2021-06-01 00:00:00")
-    cur = {r["k"]: r for r in out.filter(F.col("is_current")).collect()}
-    assert cur[1]["a"] == "x" and cur[1]["b"] is None
-    assert str(cur[1]["valid_from"]).startswith("2021-06-01")
-    assert cur[2]["a"] == "" and str(cur[2]["valid_from"]).startswith("2021-06-01")
-    # both old versions closed
-    assert out.filter(~F.col("is_current")).count() == 2
-
-
-def test_scd2_idempotent_on_same_snapshot(spark):
-    """Re-applying the identical snapshot must be a no-op (no spurious
-    close/reopen churn) — the property that makes daily loads safe."""
-    eot = "9999-12-31 00:00:00"
-    dim = _dim(spark, [(1, "alpha", "2020-01-01 00:00:00", eot, True)])
-    snapshot = spark.createDataFrame([(1, "alpha")], "k int, name string")
-    once = scd2_apply(dim, snapshot, "k", ["name"], "2021-01-01 00:00:00")
-    twice = scd2_apply(once, snapshot, "k", ["name"], "2021-02-01 00:00:00")
-    assert twice.count() == 1
-    r = twice.first()
-    assert r["is_current"] and str(r["valid_from"]).startswith("2020-01-01")
-
-
 def test_cdc_apply_latest_op_wins(spark):
     from seoul_big_data_spark.sources.writers import cdc_apply
 
@@ -193,54 +111,6 @@ def test_cdc_apply_equal_seq_tiebreak_deterministic(spark):
     # documented tie-break: op descending → 'U' beats 'D' on equal seq
     out = cdc_apply(target, changes, "k").collect()
     assert len(out) == 1 and out[0]["v"] == "u"
-
-
-def test_snapshot_to_cdc_roundtrip(spark, sf_dir):
-    """cdc_apply(old, snapshot_to_cdc(old, new)) must reproduce new exactly
-    — inserts, updates, deletes, and untouched keys."""
-    from pyspark.sql import functions as F
-
-    from seoul_big_data_spark.sources.tables import load
-    from seoul_big_data_spark.sources.writers import cdc_apply, snapshot_to_cdc
-
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    old = o.filter(F.col("o_orderkey") % 113 != 0)
-    new = o.filter(F.col("o_orderkey") % 101 != 0).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % 97 == 0,
-            F.round(F.col("o_totalprice") + 10.0, 2),
-        ).otherwise(F.col("o_totalprice")),
-    )
-    feed = snapshot_to_cdc(old, new, "o_orderkey")
-    ops = {r["op"] for r in feed.select("op").distinct().collect()}
-    assert ops == {"I", "U", "D"}
-    applied = cdc_apply(old, feed, "o_orderkey")
-    got = sorted(map(tuple, applied.collect()))
-    expect = sorted(map(tuple, new.collect()))
-    assert got == expect
-
-
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from seoul_big_data_spark.sources.tables import load
-    from seoul_big_data_spark.sources.writers import compact_small_files
-
-    o = load(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    path = str(tmp_path / "frag")
-    o.repartition(32).write.parquet(path)
-    import glob
-
-    before_files = len(glob.glob(path + "/*.parquet"))
-    before_rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-    after_files = compact_small_files(spark, path, target_bytes=1 << 30)
-    assert after_files < before_files
-    assert after_files == 1
-    after_rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert after_rows == before_rows
 
 
 def test_merge_upsert_property_random(spark):
@@ -323,101 +193,3 @@ def test_cdc_apply_property_random(spark):
                 state[k] = v
         want = sorted(state.items())
         assert got == want, f"trial {trial}"
-
-
-def test_scd2_apply_invariants_random_walk(spark):
-    """Property: after applying a sequence of random snapshots, (a) every
-    live key has EXACTLY one current row, (b) that row equals the latest
-    snapshot's payload, (c) closed rows never overlap in validity and
-    close exactly at a later load_ts."""
-    import random
-
-    rng = random.Random(13)
-    keys = list(range(6))
-    dim = spark.createDataFrame(
-        [],
-        "k long, v string, valid_from timestamp, valid_to timestamp, "
-        "is_current boolean",
-    )
-    latest = {}
-    for step in range(4):
-        snap_rows = [
-            (k, rng.choice(["a", "b", "c"]))
-            for k in rng.sample(keys, rng.randint(3, 6))
-        ]
-        snap = spark.createDataFrame(snap_rows, "k long, v string")
-        ts = f"2024-01-0{step + 1} 00:00:00"
-        dim = scd2_apply(dim, snap, "k", ["v"], ts)
-        dim = dim.localCheckpoint()
-        for k, v in snap_rows:
-            latest[k] = v
-        cur = {
-            r["k"]: r["v"] for r in dim.filter(F.col("is_current")).collect()
-        }
-        # NOTE: scd2 keeps keys absent from a later snapshot as historical
-        # current rows only if unchanged-delete semantics say so; here
-        # deleted_keep preserves them, so every key ever seen stays current
-        # with its last value
-        assert cur == latest, f"step {step}"
-        closed = dim.filter(~F.col("is_current")).collect()
-        by_key = {}
-        for r in closed:
-            by_key.setdefault(r["k"], []).append(
-                (r["valid_from"], r["valid_to"])
-            )
-        for k, spans in by_key.items():
-            spans.sort()
-            for (f1, t1), (f2, t2) in zip(spans, spans[1:]):
-                assert t1 <= f2, f"overlapping history for {k}"
-        n_cur = (
-            dim.filter(F.col("is_current")).groupBy("k").count()
-            .filter(F.col("count") > 1).count()
-        )
-        assert n_cur == 0
-
-
-def test_delete_where_partitioned_prunes_untouched_partitions(
-    spark, sf_dir, tmp_path
-):
-    """Pruned DELETE: rows matching the predicate disappear, untouched
-    partitions' files keep their mtimes (never rewritten), emptied
-    partitions vanish, and the surviving data equals the unpartitioned
-    filter."""
-    import os
-
-    from seoul_big_data_spark.sources.writers import delete_where_partitioned
-    from seoul_big_data_spark.sources.tables import load
-
-    path = str(tmp_path / "t")
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-    )
-    o.write.partitionBy("o_orderstatus").parquet(path)
-    # delete every high-price F order; P/O partitions must not be touched
-    pred = (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 200000)
-    before = {
-        p: os.path.getmtime(os.path.join(path, p))
-        for p in os.listdir(path)
-        if p.startswith("o_orderstatus=")
-    }
-    n_expected = o.filter(~pred).count()
-    affected = delete_where_partitioned(
-        spark, path, pred, "o_orderstatus", ["F"]
-    )
-    assert affected == ["F"]
-    after = spark.read.parquet(path)
-    assert after.count() == n_expected
-    assert after.filter(pred).count() == 0
-    for p, mtime in before.items():
-        if p != "o_orderstatus=F":
-            assert os.path.getmtime(os.path.join(path, p)) == mtime, p
-
-    # emptied partition disappears entirely
-    affected = delete_where_partitioned(
-        spark, path, F.col("o_orderstatus") == "P", "o_orderstatus"
-    )
-    assert affected == ["P"]
-    assert not os.path.isdir(os.path.join(path, "o_orderstatus=P"))
-    assert spark.read.parquet(path).filter(
-        F.col("o_orderstatus") == "P"
-    ).count() == 0

@@ -86,99 +86,3 @@ def test_ivf_layout_bucket_partition_prunes(spark, sf_dir, tmp_path):
     # pruned read returns exactly the probe's bucket-mates
     expect = signed.filter(F.col("bucket") == probe["bucket"]).count()
     assert back.count() == expect
-
-
-def test_partition_pruned_merge_leaves_untouched_partitions_alone(
-    spark, sf_dir, tmp_path
-):
-    """merge_upsert_partitioned must (a) produce the same table state as the
-    full-rewrite merge path, and (b) never rewrite — or even open for write —
-    partitions the source doesn't touch: their files' mtimes survive."""
-    import glob
-    import os
-
-    from seoul_big_data_spark.sources.writers import (
-        merge_upsert,
-        merge_upsert_partitioned,
-    )
-
-    base = (
-        load(spark, "orders", sf_dir)
-        .select(
-            "o_orderkey",
-            (F.col("o_orderkey") % 5).cast("int").alias("pt"),
-            F.col("o_totalprice").cast("double").alias("val"),
-        )
-        .limit(500)
-    )
-    path = str(tmp_path / "merge_target")
-    base.write.partitionBy("pt").parquet(path)
-
-    # source touches ONLY partitions 1 and 3: updates for existing keys
-    # (keeping their partition value, per the documented constraint) plus
-    # brand-new keys
-    upd = (
-        spark.read.parquet(path)
-        .filter(F.col("pt").isin(1, 3))
-        .limit(40)
-        .select("o_orderkey", "pt", (F.col("val") + 1000).alias("val"))
-    )
-    new = spark.createDataFrame(
-        [(10_000_001, 1, 1.5), (10_000_002, 3, 2.5)],
-        "o_orderkey long, pt int, val double",
-    )
-    source = upd.unionByName(new).localCheckpoint()
-
-    untouched = {
-        f: os.path.getmtime(f)
-        for p in (0, 2, 4)
-        for f in glob.glob(os.path.join(path, f"pt={p}", "*.parquet"))
-    }
-    assert untouched
-
-    # expected state from the O(table) full-rewrite path
-    expect = sorted(
-        map(
-            tuple,
-            merge_upsert(
-                spark.read.parquet(path).select("o_orderkey", "pt", "val"),
-                source.select("o_orderkey", "pt", "val"),
-                "o_orderkey",
-            ).collect(),
-        )
-    )
-
-    merge_upsert_partitioned(spark, path, source, "o_orderkey", "pt")
-
-    got = sorted(
-        map(tuple, spark.read.parquet(path).select("o_orderkey", "pt", "val").collect())
-    )
-    assert got == expect
-    after = {
-        f: os.path.getmtime(f)
-        for p in (0, 2, 4)
-        for f in glob.glob(os.path.join(path, f"pt={p}", "*.parquet"))
-    }
-    assert after == untouched  # same files, same mtimes — never rewritten
-
-
-def test_partition_pruned_merge_delete_empties_partition(spark, tmp_path):
-    """A delete_condition that wipes an entire partition removes its
-    directory (dynamic overwrite alone would leave stale files)."""
-    import glob
-    import os
-
-    from seoul_big_data_spark.sources.writers import merge_upsert_partitioned
-
-    t = spark.createDataFrame(
-        [(1, 7, "a"), (2, 7, "b"), (3, 8, "c")], "k long, pt int, v string"
-    )
-    path = str(tmp_path / "del_target")
-    t.write.partitionBy("pt").parquet(path)
-    src = spark.createDataFrame([(1, 7, "x"), (2, 7, "y")], "k long, pt int, v string")
-    merge_upsert_partitioned(
-        spark, path, src, "k", "pt", delete_condition=F.lit(True)
-    )
-    assert not glob.glob(os.path.join(path, "pt=7", "*.parquet"))
-    got = sorted(map(tuple, spark.read.parquet(path).select("k", "pt", "v").collect()))
-    assert got == [(3, 8, "c")]

@@ -60,10 +60,6 @@ from seoul_big_data_spark.sources.tiffcodec import (  # noqa: E402
     decode_tiff_pages,
     encode_tiff,
 )
-from seoul_big_data_spark.sources.y4mcodec import (  # noqa: E402
-    decode_y4m_planes,
-    encode_y4m_planes,
-)
 
 
 def main() -> int:
@@ -139,19 +135,6 @@ def main() -> int:
                 fails += 1
                 print(f"FAIL {name} trial={trial}")
                 traceback.print_exc(limit=3)
-        try:
-            planes = [tuple(
-                rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-                for _ in range(3)
-            )]
-            got = decode_y4m_planes(encode_y4m_planes(planes, w, h, "444"))
-            assert all(
-                np.array_equal(a, b) for a, b in zip(planes[0], got[0])
-            )
-        except Exception:
-            fails += 1
-            print(f"FAIL y4m trial={trial}")
-            traceback.print_exc(limit=3)
 
         # tier 2: palette / deep / multi-channel variants
         from seoul_big_data_spark.sources.multimodal import (
