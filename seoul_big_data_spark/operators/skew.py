@@ -67,7 +67,12 @@ def spread_scan(df: DataFrame) -> DataFrame:
     plan already contains an Exchange is therefore returned unchanged
     without probing: it is post-shuffle parallel by construction, and
     probing it would be the eager-job bug. For exchange-free plans the RDD
-    conversion plans but runs nothing."""
+    conversion plans but runs nothing.
+
+    The substring test also matches ``BroadcastExchange``, by design: on a
+    broadcast-join frame the probe runs the broadcast job eagerly (1 job on
+    ``lineitem ⋈ broadcast(part)`` at sf0.001), while the guard returns the
+    frame unchanged with 0 jobs (pinned in ``tests/test_skew.py``)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df

@@ -170,22 +170,9 @@ def test_csv_load_union_property(spark, catalog, ptable, pcolumn, csv_file):
     assert head.unionByName(part).select("ID").distinct().count() == 7
 
 
-def _jobs(spark, fn):
-    """(fn's result, the number of Spark jobs it launched), counted through a
-    job group as perfbench counts them."""
-    sc = spark.sparkContext
-    group = f"jobs-{fn.__name__}-{id(fn)}"
-    sc.setJobGroup(group, group, False)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_csv_load_job_and_plan_shape(spark, catalog, ptable, pcolumn, csv_file, tmp_path):
+def test_csv_load_job_and_plan_shape(
+    spark, catalog, ptable, pcolumn, csv_file, tmp_path, count_jobs
+):
     """Four jobs per load (checkpoint, columns, per-block counts); a staging
     plan without a shuffle and an audit rewrite without a join."""
     read = {}
@@ -198,7 +185,7 @@ def test_csv_load_job_and_plan_shape(spark, catalog, ptable, pcolumn, csv_file, 
             spark, catalog, read["ptable"], read["pcolumn"], csv_file, 5758
         )
 
-    res, n_jobs = _jobs(spark, load)
+    res, n_jobs = count_jobs(load)
     assert n_jobs <= 4
     staging_plan = res.staging._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in staging_plan
@@ -208,7 +195,7 @@ def test_csv_load_job_and_plan_shape(spark, catalog, ptable, pcolumn, csv_file, 
     def write_audit():
         res.ptable_updated.write.parquet(str(tmp_path / "audit"))
 
-    _, n_jobs = _jobs(spark, write_audit)
+    _, n_jobs = count_jobs(write_audit)
     assert n_jobs <= 1
 
 
@@ -269,13 +256,13 @@ def test_master_url_branches(spark):
     assert out240 == slashed.rsplit("/", 2)[0] == "http://openapi.example/K/xml/TbThing/1"
 
 
-def test_master_url_launches_at_most_one_job(spark):
+def test_master_url_launches_at_most_one_job(spark, count_jobs):
     url = "http://openapi.example/sample/xml/TbThing/1/5/"
 
     def derive():
         return openapi_load.derive_master_url(spark, url, dataset_id=1, auth_key="K")
 
-    _, n_jobs = _jobs(spark, derive)
+    _, n_jobs = count_jobs(derive)
     assert n_jobs <= 1
 
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from seoul_big_data_spark.operators.skew import salted_join
+from seoul_big_data_spark.operators.skew import salted_join, spread_scan
 from seoul_big_data_spark.sources.tables import load
 
 
@@ -141,3 +141,15 @@ def test_lit_double_array_non_finite_values(spark):
     bits = lambda x: _struct.pack("<d", x)  # noqa: E731
     assert [bits(v) for v in row["a"]] == [bits(v) for v in row["b"]]
     assert math.isnan(row["a"][1])
+
+
+def test_spread_scan_leaves_broadcast_join_unprobed(spark, sf_dir, count_jobs):
+    """The ``Exchange`` guard also matches ``BroadcastExchange``, and must:
+    probing a broadcast-join frame's partitions would run the broadcast job
+    while the query is still being built."""
+    li = load(spark, "lineitem", sf_dir)
+    part = load(spark, "part", sf_dir).withColumnRenamed("p_partkey", "l_partkey")
+    joined = li.join(F.broadcast(part), "l_partkey")
+    out, n_jobs = count_jobs(lambda: spread_scan(joined))
+    assert out is joined
+    assert n_jobs == 0
