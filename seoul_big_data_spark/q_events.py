@@ -263,52 +263,58 @@ def events_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel (view → later click → later purchase) over
-    one week of events: each stage joins the previous stage's first-reach
-    time and requires strict progression. Each stage is a groupBy on
-    user_id — same key every stage, so at scale one repartition by user_id
-    serves all three aggregations (no re-shuffle between stages). The week
-    slice and each stage's user-sized output are persisted: the fact is
-    scanned once even though three stages and three counts consume them
-    (Catalyst replans shared subtrees per consumer otherwise)."""
-    from pyspark import StorageLevel
-
-    w = (
+    one week of events, in one shuffle. Two unordered windows over the
+    same ``partitionBy("user_id")`` give each event row its user's first
+    view and first click strictly after it; they share one Exchange on
+    user_id and one sort. The per-user ``groupBy`` after them needs no
+    shuffle of its own and takes the first purchase strictly after that
+    click, since every row already carries it. One global count per stage
+    follows, and ``inline`` turns that 1-row result into the three
+    ``(stage, n_users)`` rows: no join, no persist, one events scan. A null
+    ``user_id`` groups as one user at the view stage but, as in the
+    oracle's equi-joins, never reaches click or purchase."""
+    stages = [
+        ("view", "t_view"),
+        ("view>click", "t_click"),
+        ("view>click>purchase", "t_purchase"),
+    ]
+    by_user = Window.partitionBy("user_id")
+    ts, kind = F.col("ts"), F.col("event_type")
+    users = (
         load(spark, "events", sf_dir)
-        .filter(F.col("ts") < F.lit("2024-01-08").cast("timestamp"))
+        .filter(ts < F.lit("2024-01-08").cast("timestamp"))
         .select("user_id", "event_type", "ts")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fv = (
-        w.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fc = (
-        w.filter(F.col("event_type") == "click")
-        .join(fv, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fp = (
-        w.filter(F.col("event_type") == "purchase")
-        .join(fc, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-
-    def stage(label, df):
-        return df.agg(F.count("*").alias("n_users")).select(
-            F.lit(label).alias("stage"), "n_users"
+        .withColumn("t_view", F.min(F.when(kind == "view", ts)).over(by_user))
+        .withColumn(
+            "t_click",
+            F.min(
+                F.when(
+                    F.col("user_id").isNotNull()
+                    & (kind == "click")
+                    & (ts > F.col("t_view")),
+                    ts,
+                )
+            ).over(by_user),
         )
-
-    return (
-        stage("view", fv)
-        .unionByName(stage("view>click", fc))
-        .unionByName(stage("view>click>purchase", fp))
+        .groupBy("user_id")
+        .agg(
+            F.max("t_view").alias("t_view"),
+            F.max("t_click").alias("t_click"),
+            F.min(
+                F.when((kind == "purchase") & (ts > F.col("t_click")), ts)
+            ).alias("t_purchase"),
+        )
+    )
+    counts = users.agg(*(F.count(c).alias(c) for _, c in stages))
+    return counts.select(
+        F.inline(
+            F.array(
+                *(
+                    F.struct(F.lit(label).alias("stage"), F.col(c).alias("n_users"))
+                    for label, c in stages
+                )
+            )
+        )
     )
 
 

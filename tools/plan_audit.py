@@ -68,13 +68,18 @@ CHECKS = {
     # aggregate, so the plan must show a broadcast supplier lookup and NO
     # semi-join / second fact pass (see single-scan assertion below).
     "tpch_q21_waiting_supplier": ["BroadcastHashJoin"],
-    # DQ layer: rule filters must push down; profiling is one aggregate
-    "dq_accepted_values": ["PushedFilters:"],
+    # DQ layer: each rule's filter must reach the Parquet reader, where a
+    # range rule can skip row groups by their min/max stats
+    "dq_accepted_values": [
+        "PushedFilters: [Not(In(o_orderstatus",
+        "PushedFilters: [Or(LessThan(l_discount,0.0),GreaterThan(l_discount,0.1))]",
+        "LessThanOrEqual(l_quantity,0.0)]",
+        "LessThan(o_totalprice,0.0)]",
+    ],
     "sample_fraction_md5": ["Filter"],
-    # the 1-row profile aggregate is persisted (one scan for 4 unpivot
-    # consumers), so the plan shows the cached-relation scan
-    "dq_profile_columns": ["InMemoryTableScan"],
-    "events_funnel_conversion": ["HashAggregate"],
+    # the profile's one aggregate is unpivoted in place by inline (Generate)
+    "dq_profile_columns": ["Generate"],
+    "events_funnel_conversion": ["Window", "Generate"],
     # ML-prep + ANN: small sides must broadcast (benchmark set, probe set)
     "text_contamination_overlap": ["BroadcastHashJoin"],
     "similarity_ivf_ann": ["BroadcastHashJoin"],
@@ -120,6 +125,9 @@ NEGATIVE_CHECKS = {
     "tpch_q21_waiting_supplier": ["LeftSemi"],
     "events_session_busy_overlap": ["BroadcastNestedLoopJoin"],
     "embedding_quantize_int8": ["Exchange"],
+    # the funnel is one pass of windows by user: a cached relation or a
+    # join means a stage went back to re-reading the previous stage
+    "events_funnel_conversion": ["InMemoryTableScan", "SortMergeJoin", "BroadcastHashJoin"],
 }
 
 # Queries whose design promise is "the named table is scanned exactly once"
@@ -128,6 +136,8 @@ NEGATIVE_CHECKS = {
 SINGLE_SCAN = {
     "tpch_q21_waiting_supplier": "lineitem.parquet",
     "dedup_ngram_jaccard_skewsafe": "documents.parquet",
+    "dq_profile_columns": "orders.parquet",
+    "events_funnel_conversion": "events.parquet",
 }
 
 # Phase-2 negative audit: queries joining fact tables. With broadcast
